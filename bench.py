@@ -259,6 +259,18 @@ def bench_shard_write(spark, sf_dir: str, repeats: int) -> dict:
 CANARY = HEADLINE
 
 
+def _auto_canary_ref(commits, tree_of, head_tree: str) -> str | None:
+    """The first of ``commits`` (round-close commits, newest first)
+    whose ``mldag_spark`` tree (``tree_of(commit)``) differs from
+    HEAD's. Round commits also snapshot a round's end, so the newest
+    one can hold HEAD's very code — a canary against it would compare
+    HEAD with itself. None when every candidate matches HEAD."""
+    for c in commits:
+        if tree_of(c) != head_tree:
+            return c
+    return None
+
+
 def _load_prev_registry(workdir: str):
     """Materialize CANARY_REF via git-archive and import its
     mldag_spark package, restoring the current package in sys.modules
@@ -275,14 +287,24 @@ def _load_prev_registry(workdir: str):
     except (OSError, IndexError):
         pass
     if not ref or ref == "auto":
-        # auto-detect: the driver closes every round with a
-        # "round N: verdict/..." commit, so the most recent one IS the
-        # previous round's final code — no manual ref refresh needed
-        ref = subprocess.run(
-            ["git", "log", "--grep", "^round [0-9]*:", "-1",
-             "--format=%h"],
-            cwd=repo, capture_output=True, text=True, check=True,
-        ).stdout.strip()
+        # auto-detect: every round ends with a "round N: ..." commit;
+        # the newest one whose package differs from HEAD's holds the
+        # previous code — no manual ref refresh needed
+        def git(*args: str) -> str:
+            return subprocess.run(
+                ["git", *args], cwd=repo, capture_output=True, text=True,
+                check=True,
+            ).stdout.strip()
+
+        ref = _auto_canary_ref(
+            git("log", "--grep", "^round [0-9]*:", "--format=%h").split(),
+            lambda r: git("rev-parse", f"{r}:mldag_spark"),
+            git("rev-parse", "HEAD:mldag_spark"),
+        )
+        if ref is None:
+            raise RuntimeError(
+                "no round commit's mldag_spark differs from HEAD's"
+            )
     tar_path = os.path.join(workdir, "prev.tar")
     with open(tar_path, "wb") as f:
         subprocess.run(

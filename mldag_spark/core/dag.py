@@ -659,17 +659,27 @@ class MLDag(Graph):
         return wrapped
 
     @staticmethod
-    def _tag_spark_job(run: MLDagRun, node: NodeBase, verb: str) -> None:
+    def _active_spark_context():
         try:
             from pyspark.sql import SparkSession
 
             spark = SparkSession.getActiveSession()
-            if spark is not None:
-                spark.sparkContext.setJobDescription(
-                    f"mldag[{run.run_id[:8]}] {verb} {node.name}"
-                )
+            return None if spark is None else spark.sparkContext
         except Exception:
-            pass
+            return None
+
+    @staticmethod
+    def _set_job_description(sc, value: str | None) -> None:
+        # None clears the property
+        if sc is not None:
+            try:
+                sc.setJobDescription(value)
+            except Exception:
+                pass
+
+    @classmethod
+    def _tag_spark_job(cls, sc, run: MLDagRun, node: NodeBase, verb: str) -> None:
+        cls._set_job_description(sc, f"mldag[{run.run_id[:8]}] {verb} {node.name}")
 
     def _execute(
         self,
@@ -692,6 +702,13 @@ class MLDag(Graph):
                     )
                 store[slot] = value
 
+        # Spark jobs are labelled per node; the caller's own job
+        # description is restored when the run ends, so its next action
+        # is not labelled with the last node's name
+        sc = self._active_spark_context()
+        saved_description = (
+            None if sc is None else sc.getLocalProperty("spark.job.description")
+        )
         for m in self.mixins:
             m._start_run(run.run_id)
         try:
@@ -700,11 +717,11 @@ class MLDag(Graph):
                 call_args, call_kwargs = self._build_call(node, slot_values)
                 try:
                     if compute_fit:
-                        self._tag_spark_job(run, node, "fit")
+                        self._tag_spark_job(sc, run, node, "fit")
                         fit_call = self._wrap_mixins("fit", node, node.fit)
                         fit_call(*call_args, **call_kwargs)
                     if transform_leaf_nodes or not node.is_leaf():
-                        self._tag_spark_job(run, node, "transform")
+                        self._tag_spark_job(sc, run, node, "transform")
                         t_call = self._wrap_mixins(
                             "transform", node, node.transform
                         )
@@ -722,6 +739,7 @@ class MLDag(Graph):
                         f"Error occurred during {node.name}"
                     ) from e
         finally:
+            self._set_job_description(sc, saved_description)
             for m in self.mixins:
                 m._end_run(run.run_id)
         run._computed = True

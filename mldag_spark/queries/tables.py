@@ -52,12 +52,18 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
             # directory-style dataset (the normal Spark write layout,
             # ADVICE r15): an in-place part-file rewrite does not touch
             # the directory's own mtime/size, so key on the part files'
-            # aggregate (newest mtime, total size, count) instead
-            parts = [
-                os.stat(os.path.join(path, f))
-                for f in os.listdir(path)
-                if not f.startswith((".", "_"))
-            ]
+            # aggregate (newest mtime, total size, count) instead. The
+            # walk descends into Hive-partitioned ``col=val/`` levels;
+            # hidden and ``_``-prefixed entries (markers such as
+            # ``_SUCCESS``, checksums) are skipped at every level.
+            parts = []
+            for root, dirs, files in os.walk(path):
+                dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+                parts.extend(
+                    os.stat(os.path.join(root, f))
+                    for f in files
+                    if not f.startswith((".", "_"))
+                )
             key = (
                 os.path.abspath(path),
                 max((p.st_mtime for p in parts), default=st.st_mtime),

@@ -537,6 +537,37 @@ def test_fit_transform_docstring_synthesis():
     )
 
 
+@pytest.mark.parametrize("fail", [False, True], ids=["ok", "raises"])
+@pytest.mark.parametrize("caller", ["caller label", None], ids=["set", "unset"])
+def test_run_restores_callers_job_description(spark, fail, caller):
+    """A run labels each node's Spark jobs with the node's name; once it
+    ends, the caller's own description is back, whether the run
+    succeeded or a node raised."""
+    sc = spark.sparkContext
+    seen = []
+
+    def count(x):
+        seen.append(sc.getLocalProperty("spark.job.description"))
+        n = spark.range(x).count()
+        if fail:
+            raise ValueError("boom")
+        return n
+
+    dag = MLDag()
+    (dag >> count)["result"] >> dag["n"]
+    sc.setJobDescription(caller)
+    try:
+        if fail:
+            with pytest.raises(NodeExecutionError):
+                dag.transform(3)
+        else:
+            assert dag.transform(3).outputs == {"n": 3}
+        assert seen[0].startswith("mldag[") and seen[0].endswith(" count")
+        assert sc.getLocalProperty("spark.job.description") == caller
+    finally:
+        sc.setJobDescription(None)
+
+
 def test_sql_node_slots_and_mixing(spark, sf_dir):
     """sql_node declares one input slot per view name, registers the
     incoming DataFrames as temp views, and its lazy spark.sql result
@@ -644,8 +675,21 @@ def test_fit_apply_transform_pass_reuses_fit_materialization(spark, sf_dir):
     assert "ExistingRDD" in plan
     assert "Scan parquet" not in plan and "FileScan" not in plan
 
-    # same dag instance, different input dir: cache miss, not stale rows
-    other = sf_dir.replace("sf0.001", "sf0.01")
+    # same dag instance, different input dir: cache miss, not stale rows.
+    # The sibling is the smallest other scale-factor directory beside
+    # sf_dir, so the miss path runs whatever fixture sf_dir names.
+    import glob
+    import os
+
+    here = os.path.realpath(sf_dir)
+    siblings = [
+        p for p in sorted(glob.glob(os.path.join(os.path.dirname(here), "sf*")))
+        if os.path.isdir(p) and os.path.realpath(p) != here
+    ]
+    if not siblings:
+        pytest.skip(f"no sibling scale-factor directory beside {sf_dir}")
+    other = siblings[0]
+    assert os.path.realpath(other) != here
     run2 = dag.fit_transform(other)
     a = {tuple(r) for r in stats.collect()}
     b = {tuple(r) for r in run2.outputs["fit_apply_stats"].collect()}

@@ -223,3 +223,35 @@ def test_schema_cache_invalidates_on_in_place_part_rewrite(spark, tmp_path):
     os.utime(d, (dir_stat.st_atime, dir_stat.st_mtime))
 
     assert _read_parquet(spark, d).schema.fieldNames() == ["b", "c"]
+
+
+def test_schema_cache_sees_nested_partition_rewrite(spark, tmp_path):
+    """ADVICE r16 #1: in a Hive-partitioned layout the part files sit
+    one level down (``col=val/part-*.parquet``), so rewriting one in
+    place changes neither the table directory nor its listing. The
+    cache key walks every level's part files — pin that ``load`` then
+    re-infers and serves the added column."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mldag_spark.queries.tables import load
+
+    sf = tmp_path / "sf"
+    part_dir = sf / "region.parquet" / "k=1"
+    part_dir.mkdir(parents=True)
+    part = str(part_dir / "part-00000.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), part)
+    assert load(spark, str(sf), "region").schema.fieldNames() == ["a", "k"]
+
+    # rewrite the nested part IN PLACE with an extra column, then put
+    # back both directories' own mtimes so only the part file changed
+    stats = {d: os.stat(d) for d in (sf / "region.parquet", part_dir)}
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), part)
+    for d, st in stats.items():
+        os.utime(d, (st.st_atime, st.st_mtime))
+
+    df = load(spark, str(sf), "region")
+    assert df.schema.fieldNames() == ["a", "b", "k"]
+    assert sorted(r["b"] for r in df.collect()) == ["x", "y"]
