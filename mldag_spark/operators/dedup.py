@@ -301,7 +301,7 @@ def _verify_pairs_by_rows(
     id-keyed exchange is reused across the merge joins, and SHJ's
     per-join re-shuffles cost more than the sorts they avoid.
 
-    Also probed and rejected (r8, ``scripts/probe_lsh_size_prefilter``):
+    Also probed and rejected (r8, PARITY.md "r8 changes"):
     a size-ratio prefilter on candidates before the element join
     (jac <= min/max, so den*min(nA,nB) >= num*max(nA,nB) is necessary).
     At threshold 0.8 with r=4 bands the LSH candidates are already
@@ -323,8 +323,8 @@ def _verify_pairs_by_rows(
     # documents (P ≈ n²/2⁶⁴ per pair — the identical trade
     # text_boilerplate_chunks ships for its chunk fingerprint);
     # verified row-identical vs the string shape at sf0.001/sf0.01
-    # (LSH + ngram) and sf0.1 (LSH) by
-    # scripts/probe_verify_hashed_elem.py. Besides the byte
+    # (LSH + ngram) and sf0.1 (LSH) (OPTIMIZATION_r15.md §5; plan
+    # pinned by tests/test_plans.py). Besides the byte
     # narrowing, this is what keeps the big string sort out of the
     # verification path entirely: at sf0.1/32 tasks on a 1 GiB heap
     # the (id, n-gram STRING) sort spilled and the 32 concurrent
@@ -1038,7 +1038,7 @@ def edit_similarity_pairs(
     (non-spillable text hash map) at the memory-pressure scale where
     this SMJ completes by spilling, and AQE converts to a no-sort
     broadcast assembly at runtime whenever a half is small
-    (scripts/probe_edit_halves_spill.py). Plan pinned by
+    (OPTIMIZATION_r16.md §1). Plan pinned by
     tests/test_plans.py.
 
     Returns the pair columns + ``edit_sim`` (4 dp; 1.0 for two empty
@@ -1078,7 +1078,8 @@ def edit_similarity_pairs(
     # two extra corpus scans; an aggregate assembly degrades to
     # SortAggregate for string buffers — the same text sort). The
     # no-sort alternative, a shuffled-hash assembly, was probed under
-    # forced memory pressure (scripts/probe_edit_halves_spill.py,
+    # forced memory pressure (OPTIMIZATION_r16.md §1,
+    # plans/r16/probe_edit_halves_spill_30k8k.json;
     # 30k docs × 8 KiB × fan-out 4 on the default 1 GiB local heap):
     # SHJ hard-OOMs building its text-carrying hash map
     # ("SparkOutOfMemoryError: There is not enough memory to build

@@ -171,7 +171,7 @@ def token_budget_batches(
     #     scheduler overlaps them across the cluster — measured
     #     1.65x faster than (b) at sf10 when the count column is
     #     expensive lineage (tokenize): 2.3s vs 3.7s
-    #     (scripts/probe_pack_offsets_ab.py).
+    #     (PARITY.md "r15 work"; plan pinned by tests/test_operators.py).
     #
     # (b) driver-literal offsets: per-bucket totals collected (
     #     bounded: |buckets| <= 4096 rows of two longs) and embedded

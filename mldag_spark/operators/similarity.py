@@ -1608,8 +1608,8 @@ def binary_sign_pack(
     :func:`banded_signature_udf` kernel shape) — the widen path
     trades the all-JVM projection for O(dim·n_bits) exact integer
     ops per vector, still map-only, still deterministic. Measured
-    recall recovery: scripts/probe_hamming_widen.py (committed
-    artifact — SCALING ``hamming_ann.widen``). ``n_bits`` must be a
+    recall recovery: SCALING.json ``hamming_ann.widen`` (PARITY.md
+    "r15 work"). ``n_bits`` must be a
     multiple of 32."""
     if n_bits is None:
         # ONE parsed selectExpr instead of dim × (getItem + when +
@@ -1712,8 +1712,8 @@ def binary_sign_topk(
     deterministic integer hyperplane rotations
     (:func:`binary_sign_pack` ``n_bits=``) — measured at 200k
     vectors/R=200, recall@5 recovers 0.46 (64-bit native) → 0.86
-    (256-bit rotated) → 0.94 (512-bit); committed artifact
-    scripts/probe_hamming_widen.py → SCALING ``hamming_ann.widen``.
+    (256-bit rotated) → 0.94 (512-bit); recorded in SCALING.json
+    ``hamming_ann.widen``.
     And at local scales the Arrow/BLAS float
     scan simply WINS on wall (0.7–0.8 s vs 5.6–7.5 s at sf1–sf10):
     the binary path's 32× memory cut buys footprint (bigger corpus

@@ -31,7 +31,7 @@ are strictly smaller state for the same no-false-negative guarantee.
 All three evaluations of the element lineage (candidates, total,
 exact counts) sit in ONE job as plan branches (two broadcast builds +
 the probe scan), so the scheduler overlaps them — the packer A/B
-lesson (``probe_pack_offsets_ab``) applied from the start.
+lesson (PARITY.md "r15 work") applied from the start.
 """
 
 from __future__ import annotations

@@ -81,7 +81,7 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     one to keep.
 
     Probed and rejected (r8, VERDICT r7 #7,
-    ``scripts/probe_pagerank_combiner.py``): a map-side combiner for
+    PARITY.md "r8 changes"): a map-side combiner for
     the dst shuffle. The combiner ALREADY plans — Catalyst places a
     partial ``HashAggregate(partial_sum)`` before every iteration's
     dst exchange (grep ``partial_sum`` in a single-iteration plan;

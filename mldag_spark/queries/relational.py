@@ -722,7 +722,12 @@ def agg_approx_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.approx_count_distinct("l_partkey", 0.01).alias("_pa"),
         F.approx_count_distinct("l_suppkey", 0.01).alias("_sa"),
     )
-    agg = exact.join(sketch, "l_returnflag")
+    # null-safe: a NULL l_returnflag is a group of its own, as in the
+    # oracle's GROUP BY; an equi-join on the key would drop it
+    exact, sketch = exact.alias("e"), sketch.alias("s")
+    agg = exact.join(
+        sketch, F.col("e.l_returnflag").eqNullSafe(F.col("s.l_returnflag"))
+    )
     within = (
         (
             F.abs(F.col("_pa") - F.col("n_parts_exact"))
@@ -736,7 +741,7 @@ def agg_approx_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return agg.select(
-        "l_returnflag",
+        "e.l_returnflag",
         "n_parts_exact",
         "n_supps_exact",
         within.alias("approx_within_5pct"),

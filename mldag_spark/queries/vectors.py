@@ -410,13 +410,13 @@ def _near_dup_qualifying(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _near_dup_frames(spark: SparkSession, sf_dir: str) -> dict:
     """The near-dup subplan's stage frames, exposed for the scaling
-    stage-split probe (scripts/probe_neardup_stages.py, VERDICT r8
-    #4): 'signatures' (banded signature explode + the bucket-window
+    stage split (NEARDUP_STAGES_r09.json, PARITY.md "r9 work", VERDICT
+    r8 #4): 'signatures' (banded signature explode + the bucket-window
     rank), 'candidates' (windowed self-join + pair distinct), and
     'qualifying' (verify joins + exact cosine threshold). The
-    production queries consume 'qualifying', so the probe times
-    exactly the frames the gate runs — the split cannot drift from
-    the product."""
+    production queries consume 'qualifying', so the split times
+    exactly the frames the gate runs — it cannot drift from the
+    product."""
     from mldag_spark.operators.similarity import banded_signature_udf
 
     emb = load(spark, sf_dir, "embeddings")

@@ -46,7 +46,7 @@ def recommended_session_confs() -> dict[str, str]:
       (id, element) even though (id)-hash already co-locates every
       join group. The reused keys are high-cardinality doc ids, so no
       skew concentration (probed with a synthetic hot-key corpus in
-      r16 — see scripts/probe_verify_hotkey_skew.py); the removed
+      r16 — OPTIMIZATION_r16.md §5); the removed
       shuffle grows with corpus size. Measured: dedup_minhash_lsh
       executed plan 8 → 4 data exchanges.
     - ``spark.sql.codegen.cache.maxEntries=4096`` (static; default

@@ -1149,16 +1149,17 @@ def _make_spark(heap: str, cores: int = 0, shuffle: int = 0):
     """
     from pyspark.sql import SparkSession
 
+    from mldag_spark.session import recommended_session_confs
+
     cpus = int(cores or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("mldag_spark-scaling")
+        .config(map=recommended_session_confs())
         .config("spark.driver.memory", heap)
         .config("spark.memory.fraction", "0.5")
         .config("spark.shuffle.file.buffer", "16k")
         .config("spark.sql.shuffle.partitions", str(shuffle or cpus * 2))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()

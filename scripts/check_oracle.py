@@ -60,12 +60,15 @@ def main() -> int:
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
+    from mldag_spark.session import recommended_session_confs
     from pyspark.sql import SparkSession
 
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
+        # the engine's session confs, so the gate checks the plans
+        # every caller of recommended_session_confs() runs
+        .config(map=recommended_session_confs())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         # default driver heap on purpose — see bench.py note on the

@@ -433,7 +433,7 @@ def test_token_budget_batches_no_global_window(spark):
     assert "rangepartitioning" not in plan.lower()
     # default (non-RDD-source) path: the offsets ride the in-plan
     # broadcast branch so the two input evaluations overlap in one
-    # job (the r15 A/B — scripts/probe_pack_offsets_ab.py)
+    # job (the r15 A/B — PARITY.md "r15 work")
     assert "broadcastexchange" in plan.lower()
     assert out.count() == 1000
 

@@ -63,3 +63,31 @@ def test_ungated_query_matches_oracle(name, spark, duck):
     assert len(sdf) == len(odf)
     a, b = normalize(sdf), normalize(odf)
     assert a == b, f"{name}: first diffs {[p for p in zip(a, b) if p[0] != p[1]][:3]}"
+
+
+def test_approx_distinct_counts_keeps_null_key_group(spark, tmp_path):
+    """The oracle's GROUP BY keeps a NULL-key group; the query's join of
+    its exact and sketch halves on that key must keep it too."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    li = pq.read_table(f"{SF_DIR}/lineitem.parquet")
+    i = li.schema.get_field_index("l_returnflag")
+    flags = li.column(i).to_pylist()
+    flags[0] = None
+    col = pa.array(flags, li.column(i).type)
+    li = li.set_column(i, li.schema.field(i), col)
+    pq.write_table(li, tmp_path / "lineitem.parquet")
+
+    name = "agg_approx_distinct_counts"
+    sdf = _QUERIES[name](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW lineitem AS SELECT * FROM '{tmp_path}/lineitem.parquet'"
+    )
+    odf = con.execute(_ORACLES[name]).df()
+    con.close()
+    assert sdf["l_returnflag"].isna().sum() == 1
+    assert len(sdf) == len(odf) == len(set(flags))
+    assert normalize(sdf) == normalize(odf)

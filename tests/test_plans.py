@@ -809,7 +809,7 @@ def test_edit_similarity_joins_broadcast_pairs_never_shuffle_text(spark):
     non-spillable text hash map at the memory-pressure scale where
     the SMJ completes by spilling, and AQE converts this unhinted
     join to a no-sort broadcast assembly at runtime when a half is
-    small (scripts/probe_edit_halves_spill.py). The r14 form
+    small (OPTIMIZATION_r16.md §1). The r14 form
     broadcast the first half WITH its text column attached (broadcast
     bytes = n_pairs × doc_bytes, the long-document scale-killer)."""
     from mldag_spark.operators.dedup import edit_similarity_pairs
@@ -985,3 +985,34 @@ def test_exact_percentiles_share_one_buffer(spark, registry):
                     "[percentile("
                 ) + line.count("partial_percentile(") <= 2, (name, line)
                 assert "[0." in line, (name, line)  # array of percentages
+
+
+def test_text_branch_queries_scan_parquet_once(spark, registry):
+    """r15 (OPTIMIZATION_r15.md §4): both text headline queries branch
+    one derived frame (chunk fingerprints / bigram occurrences) into a
+    frequency aggregate AND a probe join. A lazy localCheckpoint at
+    the reuse point makes the scan + tokenize + explode run once; the
+    consumer plans then read the checkpointed rows (Scan ExistingRDD)
+    instead of re-embedding the parquet scans (6 resp. 4 before)."""
+    for name in ("text_boilerplate_chunks", "text_bigram_surprisal"):
+        plan = _plan(registry[name](spark, SF_DIR))
+        assert "Scan ExistingRDD" in plan, name
+        assert "Scan parquet" not in plan, name
+
+
+def test_cosine_norms_fold_per_row_not_per_pair(spark, registry):
+    """r15 (OPTIMIZATION_r15.md §6): each side's L2 norm is projected
+    once per row; the (query × corpus) pair projection folds only the
+    dot product. Before, the pair Project carried all three folds (dot
+    plus two norms) for every pair."""
+    for name in (
+        "ann_cosine_topk", "knn_label_vote", "ann_hamming_refined_topk"
+    ):
+        blocks = _plan(registry[name](spark, SF_DIR)).split("\n\n")
+        pair = [b for b in blocks if "zip_with(" in b]
+        assert pair, name
+        assert all(b.count("aggregate(") == 1 for b in pair), name
+        for norm in (" AS _qn#", " AS _cn#"):
+            assert any(
+                norm in b and "zip_with(" not in b for b in blocks
+            ), (name, norm)

@@ -1,0 +1,34 @@
+"""Spark-free checks on the scripts and on citations of them.
+
+A script that builds its own session without the engine's confs gates
+or measures plans no caller gets; a cited ``scripts/<name>.py`` that
+was deleted sends the reader nowhere.
+"""
+
+from __future__ import annotations
+
+import re
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+
+
+def test_every_session_builder_applies_recommended_confs():
+    files = [*(REPO / "scripts").glob("*.py"), REPO / "bench.py",
+             REPO / "tests" / "conftest.py", REPO / "perfbench" / "run.py"]
+    builders = [p for p in files if "SparkSession.builder" in p.read_text()]
+    assert REPO / "scripts" / "check_oracle.py" in builders
+    missing = [str(p.relative_to(REPO)) for p in builders
+               if "recommended_session_confs()" not in p.read_text()]
+    assert not missing, missing
+
+
+def test_cited_script_paths_exist():
+    sources = [*(REPO / "mldag_spark").rglob("*.py"),
+               *(REPO / "tests").rglob("*.py"), REPO / "README.md"]
+    cited = {(name, str(p.relative_to(REPO))) for p in sources
+             for name in re.findall(r"scripts/(\w+\.py)", p.read_text())}
+    assert ("check_oracle.py", "README.md") in cited
+    dangling = sorted(c for c in cited
+                      if not (REPO / "scripts" / c[0]).is_file())
+    assert not dangling, dangling
