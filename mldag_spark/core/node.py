@@ -595,7 +595,10 @@ def checkpoint_node(
     with every round (the same reason ``connected_components`` in
     operators/dedup.py checkpoints between Large-Star/Small-Star
     rounds). Eager by default: the cut happens at wiring time, not at
-    first downstream action."""
+    first downstream action. ``eager=False`` is lazy only above the
+    input's last exchange: under AQE the call still runs every shuffle
+    and broadcast stage below it; only the final stage and the block
+    write wait for the first action."""
 
     def _impl(df):
         return df.localCheckpoint(eager=eager)

@@ -760,6 +760,20 @@ def containment_pairs(
     )
 
 
+# Closure graphs with at most this many distinct edges are finished on
+# the driver: one collect of the first checkpoint, union-find in Python,
+# labels back as a LocalRelation. The cap bounds driver memory, not
+# speed (the bounded-collect law — operators/similarity.py
+# `_collect_bounded`), and is checked against the edge count the first
+# signature already measures. On local[4] the driver finish beat the
+# star rounds at every size tried (10k edges 0.44 vs 6.2 s, 100k
+# 1.3 vs 14.4 s, 1M 7.2 vs 92 s), while its Python RSS grew ~20 MB at
+# 100k edges and ~170 MB at 1M; past the cap the star rounds spread
+# the work over the cluster instead. Gate-scale graphs (18-175 verified
+# edges at sf0.001-sf0.1; 19k pairs / 48k nodes at sf10) all fit.
+_LOCAL_CLOSURE_EDGES = 1 << 17
+
+
 def connected_components(
     edges: DataFrame, src: str = "doc_a", dst: str = "doc_b",
     max_iter: int = 25,
@@ -768,7 +782,18 @@ def connected_components(
     edge list — the clustering step that turns near-dup PAIRS into
     duplicate GROUPS (component id = min node id in the group).
 
-    Algorithm: alternating Large-Star / Small-Star (Kiveris et al.,
+    Routing: the normalized edge set (self-loops dropped, each edge
+    once as u < v) is checkpointed eagerly and its signature counts it.
+    Integral ids with at most ``_LOCAL_CLOSURE_EDGES`` edges take the
+    DRIVER path: the checkpoint is collected once, closed by union-find
+    (smaller id always the root, so component = min node id), released,
+    and the labels come back as a ``LocalRelation`` built from a
+    ``pyarrow.Table`` — no star round, no Python worker, nothing left
+    persisted. Larger graphs (or non-integral ids) take the STAR path
+    below. Both paths return the same rows, column names and types
+    (pinned by tests/test_dedup_closure.py).
+
+    Star path — alternating Large-Star / Small-Star (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14) — each
     round is two shuffle stages (groupBy min + re-emit), and the edge
     set contracts toward star graphs in O(log² n) rounds regardless of
@@ -791,11 +816,21 @@ def connected_components(
     formulation) leaves up to ``max_iter`` edge snapshots racing the
     collector for storage; the working set must be one round's
     snapshot (two, momentarily, while a round materializes) by
-    construction. The FINAL snapshot backs the returned DataFrame and
-    is deliberately left persisted; it is reclaimed by the context
-    cleaner once the caller drops the result.
+    construction. On the star path the FINAL snapshot backs the
+    returned DataFrame and is deliberately left persisted; it is
+    reclaimed by the context cleaner once the caller drops the result.
     """
+    return _components(edges, src, dst, max_iter)[0]
+
+
+def _components(
+    edges: DataFrame, src: str, dst: str, max_iter: int = 25
+) -> "tuple[DataFrame, int | None]":
+    """:func:`connected_components` plus its node count when the
+    driver path has it for free (``None`` on the star path, where
+    counting would cost a job the caller may not need)."""
     from pyspark import StorageLevel
+    from pyspark.sql.types import IntegralType
 
     def _ckpt(df: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
@@ -863,6 +898,15 @@ def connected_components(
         )
 
     sig = signature(e)
+    # integral ids only: Python orders them exactly as Spark does
+    # (floating ids would not, e.g. NaN)
+    if sig[0] <= _LOCAL_CLOSURE_EDGES and isinstance(
+        e.schema["u"].dataType, IntegralType
+    ):
+        labels, n_nodes = _local_components(e)
+        _release(e)
+        return labels, n_nodes
+
     for _ in range(max_iter):
         prev = e
         e = _ckpt(small_star(large_star(e)))
@@ -878,7 +922,40 @@ def connected_components(
     roots = e.selectExpr("u AS node", "u AS component")
     return members.union(roots).groupBy("node").agg(
         F.expr("min(component) AS component")
-    )
+    ), None
+
+
+def _local_components(e: DataFrame) -> "tuple[DataFrame, int]":
+    """Driver finish of :func:`connected_components` over the
+    materialized (u < v) edge set ``e``: ``(labels, n_nodes)``.
+    Union-find with path compression; the smaller root always wins, so
+    every root is its component's min id, as on the star path."""
+    import pyarrow as pa
+
+    t = e.toArrow()
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in zip(t.column("u").to_pylist(), t.column("v").to_pylist()):
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    nodes = list(parent)
+    id_type = t.schema.field("u").type
+    table = pa.table({
+        "node": pa.array(nodes, id_type),
+        "component": pa.array([find(x) for x in nodes], id_type),
+    })
+    return e.sparkSession.createDataFrame(table), len(nodes)
 
 
 # the default broadcast cap for keep-best member/loser joins (MEMBER
@@ -924,12 +1001,13 @@ def keep_best_losers_counted(
     RefinedWeb/Gopher-style "keep the best copy" dedup; composing
     with :func:`minhash_lsh_pairs` makes this the 100 TB fuzzy path.
 
-    Plan shape (r15, VERDICT r14 #1a): Large-Star/Small-Star closure
-    over the pairs (:func:`connected_components`, O(log² n) shuffle
-    rounds), then the member set is COUNTED (one cheap job over the
-    persisted closure output — it is about to be window-ranked
-    anyway) and the labels⋈quality join strategy is picked from the
-    measured size, never guessed:
+    Plan shape (r15, VERDICT r14 #1a): connected-components closure
+    over the pairs (:func:`connected_components` — finished on the
+    driver for small graphs, else O(log² n) Large-Star/Small-Star
+    shuffle rounds), then the member set is COUNTED (free on the
+    driver path; one cheap job over the persisted closure output on
+    the star path) and the labels⋈quality join strategy is picked
+    from the measured size, never guessed:
 
     * ``n_members <= broadcast_member_cap`` — quality is first pruned
       to member rows with a broadcast LEFT SEMI against the member-id
@@ -963,16 +1041,20 @@ def keep_best_losers_counted(
     """
     from pyspark.sql.window import Window
 
-    # No persist here (code-review r15 #4 — the bpe_learn /
-    # bloom_build_sharded leak class): the count job and the later
-    # join each run the closure's final groupBy once, but that
-    # aggregate reads the closure's PERSISTED final edge snapshot
-    # (connected_components leaves it cached by contract), so the
-    # recompute is one member-sized aggregate over local blocks —
-    # cheaper than leaving a cached member frame behind per
-    # invocation across a 182-query registry sweep.
-    labels = connected_components(pairs, src, dst)
-    n_members = labels.count()
+    # The member count comes free with the closure's driver path (its
+    # labels are a LocalRelation whose count would still cost 2 jobs).
+    # On the star path it is one count job. No persist there
+    # (code-review r15 #4 — the bpe_learn / bloom_build_sharded leak
+    # class): the count job and the later join each run the closure's
+    # final groupBy once, but that aggregate reads the closure's
+    # PERSISTED final edge snapshot (connected_components leaves it
+    # cached by contract), so the recompute is one member-sized
+    # aggregate over local blocks — cheaper than leaving a cached
+    # member frame behind per invocation across a 182-query registry
+    # sweep.
+    labels, n_members = _components(pairs, src, dst)
+    if n_members is None:
+        n_members = labels.count()
     q = quality.select(F.col(id_col).alias("node"), quality_col)
     # LEFT join either way: a cluster member MISSING from the quality
     # frame (quality computed over a filtered subset — easy when the
@@ -1046,14 +1128,17 @@ def edit_similarity_pairs(
     """
     a = texts.select(F.col(id_col).alias(src), F.col(text_col).alias("_ta"))
     b = texts.select(F.col(id_col).alias(dst), F.col(text_col).alias("_tb"))
-    # Materialize the pair frame ONCE (lazy localCheckpoint — the
-    # established repo idiom; lazy so the miner still runs inside the
-    # caller's timed action, and ContextCleaner reclaims the blocks
+    # Materialize the pair frame ONCE (localCheckpoint(eager=False) —
+    # the established repo idiom; ContextCleaner reclaims the blocks
     # when the result frame is dropped, no cache-manager leak across
-    # the registry sweep). Without it the two broadcast builds below
-    # are keyed differently (src vs dst), so they can never share one
-    # BroadcastExchange and each re-executes the ENTIRE miner subtree
-    # feeding `pairs` — measured r15 on dedup_edit_verified: the
+    # the registry sweep). It is only PARTLY lazy: under AQE the call
+    # itself runs every shuffle and broadcast stage of the miner below
+    # it (at sf0.01 the fuzzy-dedup DAG's verify_edit node fires 4
+    # jobs with nothing else in it); only the final stage and the block
+    # write wait for the caller's action. Without it the two broadcast
+    # builds below are keyed differently (src vs dst), so they can never
+    # share one BroadcastExchange and each re-executes the ENTIRE miner
+    # subtree feeding `pairs` — measured r15 on dedup_edit_verified: the
     # prefix-miner tail ran once per broadcast (the formatted plan
     # shows the miner subtree three times), and checkpointing cut the
     # query's executed exchanges from the miner's ~3× replication to

@@ -379,10 +379,14 @@ def dag_ml_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # transform pass in the caller's action on the rollup leaf — so
     # the tokenize-×3 featurization ran twice per query run. The
     # source node takes the run's sf_dir directly, so the memoized
-    # lazily-checkpointed frame (no text column: ids, three doubles,
-    # label, features vector) is keyed on it; the transform pass
-    # reuses the rows the fit action materialized. Fresh dag — hence
-    # fresh memo — per query invocation: nothing persists across runs.
+    # checkpointed frame (no text column: ids, three doubles, label,
+    # features vector) is keyed on it; the transform pass reuses the
+    # rows the fit action materialized. The checkpoint is truly lazy
+    # here only because no exchange sits below it: under AQE,
+    # localCheckpoint(eager=False) runs every shuffle and broadcast
+    # stage below it at the call (tests/test_dedup_closure.py). Fresh
+    # dag — hence fresh memo — per query invocation: nothing persists
+    # across runs.
     feat_memo: dict = {}
 
     def featurize(sf_dir):
@@ -590,10 +594,13 @@ def build_clean_pack_dag(spark: SparkSession):
         # executed plan ran the scan → regex-clean → md5-dedup-window
         # front half SIX times (6 parquet scans, 0 ReusedExchange;
         # AQE cannot reuse because each branch projects/filters
-        # differently right above the shared subtree). Lazy
-        # localCheckpoint at the reuse point — the established r15
-        # idiom (edit-verify miner, text single-scan) — makes it run
-        # once inside the caller's action. The materialized rows are
+        # differently right above the shared subtree). A
+        # localCheckpoint(eager=False) at the reuse point — the
+        # established r15 idiom (edit-verify miner, text single-scan) —
+        # makes it run once. Not lazily: under AQE the call runs the
+        # dedup window's shuffle stage (1 job at sf0.01), and only the
+        # final stage and the block write wait for the first action
+        # (the packer's quantile job). The materialized rows are
         # the gated SURVIVORS (doc_id, clean, n_tokens, bucket): the
         # same bytes the dedup exchange already moved once, stored
         # for the query's own lifetime, reclaimed by ContextCleaner
@@ -620,7 +627,9 @@ def build_clean_pack_dag(spark: SparkSession):
         # action, the offsets branch, the output branch) — without a
         # reuse point each evaluation re-runs the decontamination
         # shingle self-join. The checkpointed frame is NARROW
-        # ((doc_id, n_tokens) survivor rows).
+        # ((doc_id, n_tokens) survivor rows). Under AQE the call
+        # itself runs the self-join's shuffle and broadcast stages
+        # (8 jobs at sf0.01).
         kept = kept.localCheckpoint(eager=False)
         return token_budget_batches(
             kept, "doc_id", "n_tokens", max_tokens=4096
@@ -726,13 +735,16 @@ def build_fit_apply_dag(spark: SparkSession):
     # the transform pass in the caller's action on the stats leaf —
     # and each pass rebuilds every frame, so the clean → dedup-window
     # → gate front half executed TWICE per query run. Memoizing the
-    # lazily-checkpointed featurize frame (narrow survivors: doc_id,
-    # lang, 2-double vector, bucket) makes the transform pass reuse
-    # the rows the fit action already materialized. The memo is keyed
-    # on the run's sf_dir (recorded by the source node, which the
-    # scheduler always runs first) and lives in this closure: a fresh
-    # dag — hence a fresh memo — is built per query invocation, so
-    # nothing persists across invocations.
+    # checkpointed featurize frame (narrow survivors: doc_id, lang,
+    # 2-double vector, bucket) makes the transform pass reuse the
+    # rows the fit pass materialized. The checkpoint is only partly
+    # lazy: under AQE, localCheckpoint(eager=False) runs the dedup
+    # window's shuffle stage at the call in the fit pass's featurize
+    # node; the final stage and the block write wait for the scaler
+    # fit. The memo is keyed on the run's sf_dir (recorded by the
+    # source node, which the scheduler always runs first) and lives in
+    # this closure: a fresh dag — hence a fresh memo — is built per
+    # query invocation, so nothing persists across invocations.
     run_src: dict = {}
     feat_memo: dict = {}
 

@@ -3002,12 +3002,15 @@ def text_boilerplate_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     its reuse point, so the scan + regex tokenize + chunk explode runs
     ONCE and both branches (frequency + probe) read the materialized
     (doc_id, n_tokens, ck) blocks — 24 B/row, the narrowest possible
-    reuse frame thanks to the 8-byte ck fingerprint. Lazy, so the
-    producer still executes inside the caller's action; ContextCleaner
-    reclaims the blocks when the frame is dropped. Measured at sf0.1:
-    0.794 → 0.688 s (interleaved A/B, identical rows at sf0.001 and
-    sf0.1). The r8-r14 two-scan shape was itself a deliberate trade
-    against a dense_rank window over ``partitionBy(ck)`` — still
+    reuse frame thanks to the 8-byte ck fingerprint. The producer
+    still executes inside the caller's action because no exchange sits
+    below the checkpoint (under AQE, ``localCheckpoint(eager=False)``
+    runs the shuffle and broadcast stages below it at the call);
+    ContextCleaner reclaims the blocks when the frame is dropped.
+    Measured at sf0.1: 0.794 → 0.688 s (interleaved A/B, identical
+    rows at sf0.001 and sf0.1). The r8-r14 two-scan shape was itself a
+    deliberate trade against a dense_rank window over
+    ``partitionBy(ck)`` — still
     rejected, unchanged rationale: boilerplate keys are BY DEFINITION
     the hottest keys in the corpus, a window puts a mega-frequent
     chunk's every occurrence into one partition, while the aggregate
@@ -3047,7 +3050,8 @@ def text_boilerplate_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"explode({chunk_arr}) AS chunk",
         )
         .selectExpr("doc_id", "n_tokens", "xxhash64(chunk) AS ck")
-        # lazy: executes inside the caller's timed action, once
+        # no exchange below, so this executes inside the caller's
+        # timed action, once
         .localCheckpoint(eager=False)
     )
     boiler = (
@@ -3145,10 +3149,12 @@ def text_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr("doc_id", "concat_ws(' ', _z.`0`, _z.`1`) AS bg")
         # r15: grams feeds both the frequency branch and the probe
         # join, so without a reuse point the scan + regex tokenize +
-        # explode executes twice. Lazy localCheckpoint materializes it
-        # once inside the caller's action; the blocks are the same
-        # occurrence-scale rows the probe join shuffles anyway, so no
-        # new scale class of data is stored. Interleaved A/B at sf0.1:
+        # explode executes twice. localCheckpoint(eager=False)
+        # materializes it once inside the caller's action (lazy here
+        # only because no exchange sits below it: under AQE the call
+        # runs any shuffle or broadcast stage below it); the blocks are
+        # the same occurrence-scale rows the probe join shuffles anyway,
+        # so no new scale class of data is stored. Interleaved A/B at sf0.1:
         # ckpt faster in 3/4 warm passes (min 0.99 → 0.96 s), identical
         # rows at sf0.001 and sf0.1.
         .localCheckpoint(eager=False)

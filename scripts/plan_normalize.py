@@ -6,8 +6,11 @@ strings) are gated on a NORMALIZED EXECUTED-PLAN DIFF: the converted
 builder must produce a byte-identical plan modulo the identifiers that
 differ between any two constructions of the same query — expression
 ids (#123), plan ids, lambda variable names, checkpoint RDD ids,
-subquery/CTE numbering. This script is that normalizer, committed so
-the gate is reproducible.
+subquery/CTE numbering, the random suffix of streaming work dirs.
+This script is that normalizer, committed so the gate is
+reproducible. Not masked: the column order of a distinct-aggregate
+``Expand``, which follows expression-id hashes and so can differ
+between a full-registry dump and a dump of one query.
 
 Usage:
   python scripts/plan_normalize.py a.txt b.txt      # diff → exit 0/1
@@ -36,6 +39,9 @@ def normalize(text: str) -> str:
     t = re.sub(r"scalar-subquery#x \[id=#?\w+\]", "scalar-subquery", t)
     t = re.sub(r"exprId=\d+", "exprId=x", t)
     t = re.sub(r"StatsEstimation\S*", "", t)
+    # the random tempfile.mkdtemp suffix of a streaming query's work
+    # dir (queries/streaming.py `_stream_workdir`, prefixes stream_*_)
+    t = re.sub(r"\b(stream_[a-z]+_)[a-z0-9_]{8}/", r"\1x/", t)
     return t
 
 

@@ -32,3 +32,17 @@ def test_cited_script_paths_exist():
     dangling = sorted(c for c in cited
                       if not (REPO / "scripts" / c[0]).is_file())
     assert not dangling, dangling
+
+
+def test_plan_normalize_masks_stream_workdirs():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "plan_normalize", REPO / "scripts" / "plan_normalize.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    line = "Location: InMemoryFileIndex [file:/tmp/{}/sketch]"
+    a, b, c = (mod.normalize(line.format(d)) for d in (
+        "stream_hh_x9879nz1", "stream_hh_8w_sqynb", "stream_pack_xdsrrusu"))
+    assert a == b == "Location: InMemoryFileIndex [file:/tmp/stream_hh_x/sketch]"
+    assert c != a  # the prefix still tells the queries apart
