@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 import mldag_spark as m
 from mldag_spark.queries import register
-from mldag_spark.queries.tables import dsum, load
+from mldag_spark.queries.tables import dsum, load, stat_key
 
 
 @register(
@@ -742,9 +742,10 @@ def build_fit_apply_dag(spark: SparkSession):
     # window's shuffle stage at the call in the fit pass's featurize
     # node; the final stage and the block write wait for the scaler
     # fit. The memo is keyed on the run's sf_dir (recorded by the
-    # source node, which the scheduler always runs first) and lives in
-    # this closure: a fresh dag — hence a fresh memo — is built per
-    # query invocation, so nothing persists across invocations.
+    # source node, which the scheduler always runs first) and on the
+    # freshness of its documents table, so a run of the same dag after
+    # an in-place rewrite featurizes the new rows. Earlier entries are
+    # kept, not unpersisted: earlier runs' outputs may still be read.
     run_src: dict = {}
     feat_memo: dict = {}
 
@@ -761,7 +762,11 @@ def build_fit_apply_dag(spark: SparkSession):
         return pipeline_dedup_stage(cleaned)
 
     def featurize(deduped):
-        key = run_src["dir"]
+        sf_dir = run_src["dir"]
+        try:
+            key = (sf_dir, stat_key(f"{sf_dir}/documents.parquet"))
+        except OSError:  # unstatable (non-local FS): directory only
+            key = (sf_dir, None)
         if key not in feat_memo:
             n, dr, keep = pipeline_gate_exprs()
             feat_memo[key] = (

@@ -45,33 +45,37 @@ DIM_TABLES = {"region", "nation", "supplier", "part", "customer"}
 _SCHEMA_CACHE: dict[tuple, object] = {}
 
 
+def stat_key(path: str) -> tuple:
+    """Freshness key of a parquet dataset: (absolute path, mtime, size)
+    for a file; for a directory-style dataset (the normal Spark write
+    layout) the part files' aggregate (newest mtime, total size,
+    count), since an in-place part-file rewrite does not touch the
+    directory's own mtime/size. The walk descends into Hive-partitioned
+    ``col=val/`` levels; hidden and ``_``-prefixed entries (markers
+    such as ``_SUCCESS``, checksums) are skipped at every level.
+    Raises OSError when the path cannot be stat'ed."""
+    st = os.stat(path)
+    if not os.path.isdir(path):
+        return (os.path.abspath(path), st.st_mtime, st.st_size)
+    parts = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        parts.extend(
+            os.stat(os.path.join(root, f))
+            for f in files
+            if not f.startswith((".", "_"))
+        )
+    return (
+        os.path.abspath(path),
+        max((p.st_mtime for p in parts), default=st.st_mtime),
+        sum(p.st_size for p in parts),
+        len(parts),
+    )
+
+
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     try:
-        st = os.stat(path)
-        if os.path.isdir(path):
-            # directory-style dataset (the normal Spark write layout,
-            # ADVICE r15): an in-place part-file rewrite does not touch
-            # the directory's own mtime/size, so key on the part files'
-            # aggregate (newest mtime, total size, count) instead. The
-            # walk descends into Hive-partitioned ``col=val/`` levels;
-            # hidden and ``_``-prefixed entries (markers such as
-            # ``_SUCCESS``, checksums) are skipped at every level.
-            parts = []
-            for root, dirs, files in os.walk(path):
-                dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-                parts.extend(
-                    os.stat(os.path.join(root, f))
-                    for f in files
-                    if not f.startswith((".", "_"))
-                )
-            key = (
-                os.path.abspath(path),
-                max((p.st_mtime for p in parts), default=st.st_mtime),
-                sum(p.st_size for p in parts),
-                len(parts),
-            )
-        else:
-            key = (os.path.abspath(path), st.st_mtime, st.st_size)
+        key = stat_key(path)
     except OSError:
         # unstatable (e.g. non-local FS): fall back to plain inference
         return spark.read.parquet(path)

@@ -1230,27 +1230,21 @@ def main() -> int:
             except Exception:
                 pass
 
-    # Probe gate (VERDICT r8 #7: "with the pass-probe retry in place
-    # this becomes mechanical"): the r8 post-rewrite re-measure was
-    # rejected because mid-run steal bursts corrupted identifiable
-    # rows. Before timing each query, run the fixed-work range(1e9)
-    # codegen probe; if it reads above 1.25x the clean anchor (0.34s
-    # at 32 cores, scaled by core count for the local[16] sections),
-    # sleep and re-probe up to ~180s. The final reading is stamped on
-    # the row as probe_sec so every SCALING number carries its own
-    # host-condition evidence.
+    # Probe gate: mid-run steal bursts corrupt whole rows, so before
+    # timing each query run bench.py's codegen probe; if it reads above
+    # bench.PROBE_FACTOR x the core-scaled clean anchor, sleep and
+    # re-probe up to ~180s. The final reading is stamped on the row as
+    # probe_sec so every SCALING number carries its own host-condition
+    # evidence.
+    from bench import PROBE_FACTOR, codegen_probe, probe_anchor
+
     last_probe = [0.0]
 
     def _probe_gate() -> float:
-        anchor = 0.34 * 32.0 / cores_now
-        limit = anchor * 1.25
+        limit = probe_anchor(cores_now) * PROBE_FACTOR
         waited = 0.0
         while True:
-            t0 = time.time()
-            spark.range(1_000_000_000).selectExpr(
-                "sum((id * id) % 1000003)"
-            ).collect()
-            p = round(time.time() - t0, 3)
+            p = codegen_probe(spark)
             if p <= limit or waited >= 180.0:
                 last_probe[0] = p
                 return p
@@ -1351,8 +1345,9 @@ def main() -> int:
             if "sf10_sec" in rows.get(k, {})
         }
         # MERGE, don't overwrite: any top-level block this harness does
-        # not itself produce (layout_sf1.0 from bench.bench_layout, or
-        # future one-off measurements) is carried over verbatim. Two
+        # not itself produce (layout_sf1.0 from the retired
+        # bench.bench_layout, or future one-off measurements) is
+        # carried over verbatim. Two
         # regenerated-artifact data losses in r6 (the layout block, the
         # shard-hash check) were both harnesses overwriting siblings
         # they didn't measure (VERDICT r6 #3).

@@ -12,13 +12,15 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import sys
 import time
 from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, REPO)
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -59,6 +61,11 @@ def main() -> int:
     ap.add_argument("--cpus", default="8")
     args = ap.parse_args()
 
+    # Python workers import mldag_spark too (UDF queries), whatever
+    # directory the script runs from
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+    )
     import __spark_entry__ as entrymod
     from mldag_spark.session import recommended_session_confs
     from pyspark.sql import SparkSession

@@ -61,8 +61,13 @@ def main() -> int:
             only = sys.argv[i + 1].split(",")
     os.makedirs(out_dir, exist_ok=True)
 
-    import sys as _sys, os as _os
-    _sys.path.insert(0, _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, repo)
+    # Python workers import mldag_spark too (UDF queries), whatever
+    # directory the script runs from
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, os.environ.get("PYTHONPATH")) if p
+    )
     from mldag_spark.session import recommended_session_confs
 
     from pyspark.sql import SparkSession
@@ -82,7 +87,6 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()

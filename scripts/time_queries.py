@@ -51,13 +51,9 @@ def main() -> int:
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
+    from bench import codegen_probe
 
     qs = entrymod.queries()
-
-    def probe() -> float:
-        t0 = time.time()
-        spark.range(1_000_000_000).selectExpr("sum((id * id) % 1000003)").collect()
-        return round(time.time() - t0, 3)
 
     # warmup: compile every plan once at the timing sf
     for n in names:
@@ -70,7 +66,7 @@ def main() -> int:
     runs: dict[str, list[float]] = {n: [] for n in names}
     probes = []
     for _ in range(repeats):
-        probes.append(probe())
+        probes.append(codegen_probe(spark))
         for n in names:
             spark.sparkContext.setJobDescription(f"time {n}")
             t0 = time.time()

@@ -696,6 +696,40 @@ def test_fit_apply_transform_pass_reuses_fit_materialization(spark, sf_dir):
     assert a != b
 
 
+def test_fit_apply_memo_serves_fresh_rows_after_inplace_rewrite(
+    spark, sf_dir, tmp_path
+):
+    """The featurize memo is keyed on the documents table's freshness:
+    running the same dag again after an in-place parquet rewrite gives
+    what a fresh dag gives, not the first run's checkpointed rows."""
+    import os
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from mldag_spark.queries.dag_pipeline import build_fit_apply_dag
+
+    data = tmp_path / "sf"
+    data.mkdir()
+    docs = data / "documents.parquet"
+    shutil.copyfile(os.path.join(sf_dir, "documents.parquet"), docs)
+
+    def stats(dag):
+        run = dag.fit_transform(str(data))
+        return sorted(tuple(r) for r in run.outputs["fit_apply_stats"].collect())
+
+    dag = build_fit_apply_dag(spark)
+    before = stats(dag)
+    table = pq.read_table(docs)
+    pq.write_table(
+        table.filter(pc.equal(pc.bit_wise_and(table["doc_id"], 1), 0)), docs
+    )
+    after = stats(dag)
+    assert after != before
+    assert after == stats(build_fit_apply_dag(spark))
+
+
 def test_quality_classifier_scores_from_fit_materialization(spark, sf_dir):
     """r16 twin of the fit_apply pin: the classifier's featurize frame
     (tokenize ×3 over the corpus) is memoized + lazily checkpointed,

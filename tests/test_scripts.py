@@ -1,4 +1,5 @@
-"""Spark-free checks on the scripts and on citations of them.
+"""Checks on the scripts and on citations of them; all Spark-free but
+one, which runs scripts/dump_plans.py in a subprocess.
 
 A script that builds its own session without the engine's confs gates
 or measures plans no caller gets; a cited ``scripts/<name>.py`` that
@@ -46,3 +47,22 @@ def test_plan_normalize_masks_stream_workdirs():
         "stream_hh_x9879nz1", "stream_hh_8w_sqynb", "stream_pack_xdsrrusu"))
     assert a == b == "Location: InMemoryFileIndex [file:/tmp/stream_hh_x/sketch]"
     assert c != a  # the prefix still tells the queries apart
+
+
+def test_dump_plans_runs_udf_queries_from_another_directory(tmp_path, sf_dir):
+    # the Python workers of a UDF query must find mldag_spark even when
+    # neither the working directory nor PYTHONPATH holds the repo
+    import os
+    import subprocess
+    import sys
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    subprocess.run(
+        [sys.executable, str(REPO / "scripts" / "dump_plans.py"), "out",
+         "--sf", sf_dir, "--only", "multimodal_fitted_audit"],
+        cwd=tmp_path, env=env, capture_output=True, timeout=600, check=True,
+    )
+    plan = (tmp_path / "out" / "multimodal_fitted_audit.txt").read_text()
+    assert not plan.startswith("ERROR"), plan[:300]
+    assert "== Physical Plan ==" in plan
