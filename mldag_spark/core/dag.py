@@ -29,6 +29,12 @@ Spark-first departures from the reference:
   Catalyst logical plans and no job runs until a sink/estimator
   materializes; each node call is tagged with a Spark job description
   for UI attribution.
+- **``fit_transform`` is one pass** — the reference runs ``fit`` and
+  then a full ``transform`` (``mldagbase.py:689-691``), so every
+  non-leaf transform ran twice; here each node is ``fit`` then
+  ``transform``-ed once, leaves included, in one run. The fit pass
+  already transforms every non-leaf node with its fitted state, so the
+  outputs are unchanged.
 """
 
 from __future__ import annotations
@@ -119,7 +125,6 @@ class MLDagRun:
         self.node_inputs: dict[str, dict[str, Any]] = defaultdict(dict)
         self.node_outputs: dict[str, dict[str, Any]] = {}
         self.outputs: dict[str, Any] = {}
-        self._computed = False
 
 
 class MLDagMixin:
@@ -690,8 +695,6 @@ class MLDag(Graph):
     ) -> MLDagRun:
         per_node, run_id = self._parse_arguments(args, kwargs)
         run = MLDagRun(run_id)
-        if run._computed:
-            raise MLDagError("a run object cannot be recomputed")
         run.inputs = {n.name: dict(v) for n, v in per_node.items()}
         for node, slots in per_node.items():
             for slot, value in slots.items():
@@ -742,7 +745,6 @@ class MLDag(Graph):
             self._set_job_description(sc, saved_description)
             for m in self.mixins:
                 m._end_run(run.run_id)
-        run._computed = True
         return run
 
     def fit(self, *args, **kwargs) -> MLDagRun:
@@ -755,8 +757,10 @@ class MLDag(Graph):
         return self._execute(args, kwargs, compute_fit=False, transform_leaf_nodes=True)
 
     def fit_transform(self, *args, **kwargs) -> MLDagRun:
-        self.fit(*args, **kwargs)
-        return self.transform(*args, **kwargs)
+        """One pass: per node in topo order run ``fit`` then
+        ``transform``, leaves included, so each transform runs once.
+        Outputs equal ``fit`` followed by ``transform``."""
+        return self._execute(args, kwargs, compute_fit=True, transform_leaf_nodes=True)
 
     # ------------------------------------------------------------------
     # sugar & introspection

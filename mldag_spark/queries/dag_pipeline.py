@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 import mldag_spark as m
 from mldag_spark.queries import register
-from mldag_spark.queries.tables import dsum, load, stat_key
+from mldag_spark.queries.tables import dsum, load
 
 
 @register(
@@ -374,24 +374,14 @@ def dag_ml_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     dag = m.MLDag()
 
-    # r16 (guide §1.2): fit_transform evaluates the DAG twice — the
-    # fit pass ends in the eager LBFGS fit on the train subset, the
-    # transform pass in the caller's action on the rollup leaf — so
-    # the tokenize-×3 featurization ran twice per query run. The
-    # source node takes the run's sf_dir directly, so the memoized
-    # checkpointed frame (no text column: ids, three doubles, label,
-    # features vector) is keyed on it; the transform pass reuses the
-    # rows the fit action materialized. The checkpoint is truly lazy
-    # here only because no exchange sits below it: under AQE,
+    # The lazy checkpoint (no text column: ids, three doubles, label,
+    # features vector) is written by the eager LBFGS fit on the train
+    # subset, so the caller's action on the rollup leaf scores the
+    # materialized features instead of re-tokenizing the corpus. It is
+    # truly lazy only because no exchange sits below it: under AQE,
     # localCheckpoint(eager=False) runs every shuffle and broadcast
-    # stage below it at the call (tests/test_dedup_closure.py). Fresh
-    # dag — hence fresh memo — per query invocation: nothing persists
-    # across runs.
-    feat_memo: dict = {}
-
+    # stage below it at the call (tests/test_dedup_closure.py).
     def featurize(sf_dir):
-        if sf_dir in feat_memo:
-            return feat_memo[sf_dir]
         d = load(spark, sf_dir, "documents")
         toks = tokenize(F.col("text"))
         n_tok = F.size(toks).cast("double")
@@ -409,11 +399,10 @@ def dag_ml_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             (F.col("f_distinct_ratio") >= 0.55).cast("double"),
         )
-        feat_memo[sf_dir] = VectorAssembler(
+        return VectorAssembler(
             inputCols=["f_tokens", "f_avg_tok_len", "f_distinct_ratio"],
             outputCol="features",
         ).transform(feats).localCheckpoint(eager=False)
-        return feat_memo[sf_dir]
 
     def train_subset(df):
         # content-free deterministic ~50% split (same md5-bucket trick
@@ -700,10 +689,9 @@ def dag_pipeline_fit_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         ``TransformNode`` applies the train-fitted model to the
         HELD-OUT test split → per-lang stats of the scaled features
 
-    ``dag.fit_transform`` runs the fit pass (estimator fit exactly
-    once, on train — pinned by the engine's leaf-elision tests) and
-    the transform pass; the oracle replays the scaler arithmetic
-    relationally ((x - mean)/STDDEV_SAMP over the train split,
+    ``dag.fit_transform`` runs one pass (estimator fit exactly once,
+    on train, before the alias applies it); the oracle replays the
+    scaler arithmetic relationally ((x - mean)/STDDEV_SAMP over the train split,
     applied to the test split — the ``dag_ml_standard_scaler``
     precedent, 3 dp rounding for summation noise). Scale shape: the
     front half is the clean_pack plan (one content-hash corpus
@@ -730,27 +718,7 @@ def build_fit_apply_dag(spark: SparkSession):
 
     dag = m.MLDag()
 
-    # r16 (guide §1.2): dag.fit_transform evaluates the DAG twice —
-    # the fit pass ends in the EAGER scaler.fit on the train split,
-    # the transform pass in the caller's action on the stats leaf —
-    # and each pass rebuilds every frame, so the clean → dedup-window
-    # → gate front half executed TWICE per query run. Memoizing the
-    # checkpointed featurize frame (narrow survivors: doc_id, lang,
-    # 2-double vector, bucket) makes the transform pass reuse the
-    # rows the fit pass materialized. The checkpoint is only partly
-    # lazy: under AQE, localCheckpoint(eager=False) runs the dedup
-    # window's shuffle stage at the call in the fit pass's featurize
-    # node; the final stage and the block write wait for the scaler
-    # fit. The memo is keyed on the run's sf_dir (recorded by the
-    # source node, which the scheduler always runs first) and on the
-    # freshness of its documents table, so a run of the same dag after
-    # an in-place rewrite featurizes the new rows. Earlier entries are
-    # kept, not unpersisted: earlier runs' outputs may still be read.
-    run_src: dict = {}
-    feat_memo: dict = {}
-
     def load_docs(sf_dir):
-        run_src["dir"] = sf_dir
         return load(spark, sf_dir, "documents")
 
     # shared front-half contract (queries/text.py) — see
@@ -761,27 +729,24 @@ def build_fit_apply_dag(spark: SparkSession):
     def dedup_exact(cleaned):
         return pipeline_dedup_stage(cleaned)
 
+    # The checkpoint (narrow survivors: doc_id, lang, 2-double vector,
+    # bucket) is written by the eager scaler.fit on the train split, so
+    # the caller's action on the stats leaf reads those rows instead of
+    # re-running the clean → dedup-window → gate front half. It is only
+    # partly lazy: under AQE, localCheckpoint(eager=False) runs the
+    # dedup window's shuffle stage at the call.
     def featurize(deduped):
-        sf_dir = run_src["dir"]
-        try:
-            key = (sf_dir, stat_key(f"{sf_dir}/documents.parquet"))
-        except OSError:  # unstatable (non-local FS): directory only
-            key = (sf_dir, None)
-        if key not in feat_memo:
-            n, dr, keep = pipeline_gate_exprs()
-            feat_memo[key] = (
-                deduped.filter(keep)
-                .select(
-                    "doc_id",
-                    "lang",
-                    array_to_vector(
-                        F.array(n.cast("double"), dr)
-                    ).alias("fv"),
-                    _split_bucket().alias("bucket"),
-                )
-                .localCheckpoint(eager=False)
+        n, dr, keep = pipeline_gate_exprs()
+        return (
+            deduped.filter(keep)
+            .select(
+                "doc_id",
+                "lang",
+                array_to_vector(F.array(n.cast("double"), dr)).alias("fv"),
+                _split_bucket().alias("bucket"),
             )
-        return feat_memo[key]
+            .localCheckpoint(eager=False)
+        )
 
     def train_split(feats):
         return feats.filter(F.col("bucket") < 80)

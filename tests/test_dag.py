@@ -216,6 +216,37 @@ def test_fit_pass_skips_leaf_transform():
     assert run2.outputs == {"out": [2.0, 3.0]}
 
 
+def test_fit_transform_runs_one_pass():
+    """fit_transform is one run: per node ``fit`` then ``transform``,
+    leaves included, so no non-leaf transform runs twice; its outputs
+    equal a fit pass followed by a transform pass."""
+    starts = []
+
+    class CountRuns(MLDagMixin):
+        def _start_run(self, run_id):
+            starts.append(run_id)
+
+    def build(mixins=()):
+        dag = MLDag(mixins=list(mixins))
+        scaler, model = _Scaler(), _Model()
+        s = dag >> as_node(scaler, name="scaler")
+        m = s >> as_node(model, name="model")
+        m["result"] >> dag["out"]
+        return dag, scaler, model
+
+    dag, scaler, model = build([CountRuns()])
+    run = dag.fit_transform([1.0, 2.0, 3.0])
+    assert scaler.calls == ["fit", "transform"]
+    assert model.calls == ["fit", "transform"]
+    assert model.fitted_on == [-1.0, 0.0, 1.0]
+    assert len(starts) == 1
+
+    two_pass, _, _ = build()
+    two_pass.fit([1.0, 2.0, 3.0])
+    assert run.outputs == two_pass.transform([1.0, 2.0, 3.0]).outputs
+    assert run.outputs == {"out": [-1.0, 0.0, 1.0]}
+
+
 def test_transform_node_train_test_pattern():
     dag = MLDag()
     scaler = _Scaler()
@@ -654,12 +685,12 @@ def test_quality_classifier_deterministic(spark, sf_dir):
 
 
 def test_fit_apply_transform_pass_reuses_fit_materialization(spark, sf_dir):
-    """r16 (guide §1.2): fit_transform runs two passes; the featurize
-    frame is a memoized lazy localCheckpoint so the transform pass
-    reads the rows the eager scaler.fit already materialized instead
-    of re-running the clean → dedup-window front half. Pins: the
-    stats leaf's plan reads the checkpoint (no parquet re-scan), and
-    the memo never serves one sf_dir's rows for another."""
+    """The featurize frame is a lazy localCheckpoint, so the stats
+    leaf reads the rows the eager scaler.fit already materialized
+    instead of re-running the clean → dedup-window front half. Pins:
+    the stats leaf's plan reads the checkpoint (no parquet re-scan),
+    and a second run of the same dag on another sf_dir never serves
+    the first run's rows."""
     import io
     import contextlib
 
@@ -675,9 +706,9 @@ def test_fit_apply_transform_pass_reuses_fit_materialization(spark, sf_dir):
     assert "ExistingRDD" in plan
     assert "Scan parquet" not in plan and "FileScan" not in plan
 
-    # same dag instance, different input dir: cache miss, not stale rows.
+    # same dag instance, different input dir: fresh rows, not stale ones.
     # The sibling is the smallest other scale-factor directory beside
-    # sf_dir, so the miss path runs whatever fixture sf_dir names.
+    # sf_dir, so the second run works whatever fixture sf_dir names.
     import glob
     import os
 
@@ -699,9 +730,9 @@ def test_fit_apply_transform_pass_reuses_fit_materialization(spark, sf_dir):
 def test_fit_apply_memo_serves_fresh_rows_after_inplace_rewrite(
     spark, sf_dir, tmp_path
 ):
-    """The featurize memo is keyed on the documents table's freshness:
-    running the same dag again after an in-place parquet rewrite gives
-    what a fresh dag gives, not the first run's checkpointed rows."""
+    """Running the same dag again after an in-place parquet rewrite
+    gives what a fresh dag gives, not the first run's checkpointed
+    rows."""
     import os
     import shutil
 
@@ -731,10 +762,10 @@ def test_fit_apply_memo_serves_fresh_rows_after_inplace_rewrite(
 
 
 def test_quality_classifier_scores_from_fit_materialization(spark, sf_dir):
-    """r16 twin of the fit_apply pin: the classifier's featurize frame
-    (tokenize ×3 over the corpus) is memoized + lazily checkpointed,
-    so the rollup leaf scores from the materialized features instead
-    of re-tokenizing."""
+    """Twin of the fit_apply pin: the classifier's featurize frame
+    (tokenize ×3 over the corpus) is lazily checkpointed, so the
+    rollup leaf scores from the features the LBFGS fit materialized
+    instead of re-tokenizing."""
     import io
     import contextlib
 
@@ -747,3 +778,31 @@ def test_quality_classifier_scores_from_fit_materialization(spark, sf_dir):
     plan = buf.getvalue()
     assert "ExistingRDD" in plan
     assert "Scan parquet" not in plan and "FileScan" not in plan
+
+
+def test_fit_apply_fit_transform_transforms_each_node_once(spark, sf_dir):
+    """One fit_transform of the fit-apply pipeline transforms every
+    node once and fits the scaler once: the clean → dedup → featurize
+    front half is built once, not once per pass."""
+    from collections import Counter
+
+    from mldag_spark.queries.dag_pipeline import build_fit_apply_dag
+
+    calls = Counter()
+
+    class CountCalls(MLDagMixin):
+        def _fit(self, call_next, node, *a, **k):
+            calls[(node.name, "fit")] += 1
+            return call_next(*a, **k)
+
+        def _transform(self, call_next, node, *a, **k):
+            calls[(node.name, "transform")] += 1
+            return call_next(*a, **k)
+
+    dag = build_fit_apply_dag(spark)
+    dag.mixins.append(CountCalls())
+    dag.fit_transform(sf_dir)
+    assert {n: calls[(n, "transform")] for n in dag.node_dict} == {
+        n: 1 for n in dag.node_dict
+    }
+    assert calls[("scaler", "fit")] == 1
