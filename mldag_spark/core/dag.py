@@ -44,7 +44,7 @@ import keyword
 import uuid
 from collections import defaultdict
 from dataclasses import dataclass, field
-from typing import Any, Callable, Iterator, Optional
+from typing import Any, Callable, Iterable, Iterator, Optional
 
 from mldag_spark.core.graph import Graph
 from mldag_spark.core.introspect import InputSlot
@@ -53,6 +53,7 @@ from mldag_spark.core.node import (
     NodeConnection,
     NodeSlot,
     as_node,
+    bind_documented,
     snake_case,
 )
 from mldag_spark.exceptions import (
@@ -481,21 +482,23 @@ class MLDag(Graph):
         ),
     }
 
-    def _render_docstring(self, verb: str) -> str:
+    def _render_docstring(
+        self, verb: str, names: Iterable[str], returns: list[str]
+    ) -> str:
+        """numpydoc body for ``verb``: one Parameters entry per name in
+        ``names`` (typed from the bound node, listing the nodes it feeds;
+        ``run_id`` gets the verb's fixed entry), then the ``returns``
+        lines. Shared by this DAG's own verbs and by ``MLDagNode``."""
         lines = [self._DOC_HEADERS[verb], "", "Parameters", self._DOC_RULE]
-        for p in self._signature.parameters.values():
-            if p.name == "run_id":
-                lines.append(self._DOC_RUN_ID[verb])
-                lines.append("")
+        for name in names:
+            if name == "run_id":
+                lines += [self._DOC_RUN_ID[verb], ""]
                 continue
-            targets = [i.node.name for i in self.inputs if i.name == p.name]
-            type_name = self._param_type_name(p.name)
-            head = f"{p.name} : {type_name}" if type_name else p.name
-            lines.append(
-                f"{head}\n    Downstream node - {', '.join(dict.fromkeys(targets))}"
-            )
-            lines.append("")
-        lines += ["Returns", self._DOC_RULE, self._DOC_RETURNS[verb]]
+            targets = dict.fromkeys(i.node.name for i in self.inputs if i.name == name)
+            type_name = self._param_type_name(name)
+            head = f"{name} : {type_name}" if type_name else name
+            lines += [head, f"    Downstream node - {', '.join(targets)}", ""]
+        lines += ["Returns", self._DOC_RULE] + returns
         return "\n".join(lines).strip()
 
     def _update_signatures(self) -> None:
@@ -503,20 +506,11 @@ class MLDag(Graph):
         self._param_mapping: dict[str, list[tuple[NodeBase, str]]] = defaultdict(list)
         for i in self.inputs:
             self._param_mapping[i.name].append((i.node, i.slot))
-        cls = type(self)
         for verb in ("fit", "transform", "fit_transform"):
-            base = getattr(cls, verb)
-
-            def make(base_method, verb=verb):
-                def method(*args, **kwargs):
-                    return base_method(self, *args, **kwargs)
-
-                method.__signature__ = self._signature
-                method.__doc__ = self._render_docstring(verb)
-                method.__name__ = verb
-                return method
-
-            setattr(self, verb, make(base))
+            doc = self._render_docstring(
+                verb, self._signature.parameters, [self._DOC_RETURNS[verb]]
+            )
+            bind_documented(self, verb, doc, self._signature)
 
     # ------------------------------------------------------------------
     # argument parsing / routing

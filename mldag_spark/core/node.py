@@ -43,6 +43,24 @@ from mldag_spark.exceptions import GraphError, MLDagError, SlotError
 _EMPTY_ANN = inspect.Parameter.empty
 
 
+def bind_documented(
+    obj: Any, verb: str, doc: str, signature: Optional[inspect.Signature] = None
+) -> None:
+    """Shadow ``obj``'s class method ``verb`` with an instance wrapper
+    carrying a synthesized ``__doc__`` (and ``__signature__``, when
+    given) — how a DAG and a dag-as-node advertise their ports."""
+    base = getattr(type(obj), verb)
+
+    def method(*args, **kwargs):
+        return base(obj, *args, **kwargs)
+
+    method.__doc__ = doc
+    method.__name__ = verb
+    if signature is not None:
+        method.__signature__ = signature
+    setattr(obj, verb, method)
+
+
 def snake_case(name: str) -> str:
     out = []
     for i, ch in enumerate(name):
@@ -392,44 +410,15 @@ class MLDagNode(NodeBase):
         238-252,294-323``): dag inputs as Parameters (deduped, typed
         from the bound node), dag outputs as Returns (typed from the
         source node), no run_id block."""
-        rule = "-" * 18
-        param_lines: list[str] = []
-        for i in dict.fromkeys(x.name for x in self.mldag.inputs):
-            t = self.mldag._param_type_name(i)
-            head = f"{i} : {t}" if t else i
-            targets = dict.fromkeys(
-                x.node.name for x in self.mldag.inputs if x.name == i
-            )
-            param_lines.append(
-                f"{head}\n    Downstream node - {', '.join(targets)}"
-            )
-            param_lines.append("")
-        return_lines: list[str] = []
+        returns: list[str] = []
         for o in self.mldag.outputs:
             t = self._output_type_name(o)
-            head = f"{o.name} : {t}" if t else o.name
-            return_lines.append(f"{head}\n    Output of {o.node.name}")
-            return_lines.append("")
+            returns += [f"{o.name} : {t}" if t else o.name,
+                        f"    Output of {o.node.name}", ""]
+        names = dict.fromkeys(x.name for x in self.mldag.inputs)
         for verb in ("fit", "transform"):
-            from mldag_spark.core.dag import MLDag
-
-            body = "\n".join(
-                [MLDag._DOC_HEADERS[verb], "", "Parameters", rule]
-                + param_lines
-                + ["Returns", rule]
-                + return_lines
-            ).strip()
-            base = getattr(type(self), verb)
-
-            def make(base_method, doc):
-                def method(*args, **kwargs):
-                    return base_method(self, *args, **kwargs)
-
-                method.__doc__ = doc
-                method.__name__ = base_method.__name__
-                return method
-
-            setattr(self, verb, make(base, body))
+            doc = self.mldag._render_docstring(verb, names, returns)
+            bind_documented(self, verb, doc)
 
     def fit(self, *args, **kwargs) -> "MLDagNode":
         self.mldag.fit(*args, **kwargs)
@@ -543,8 +532,10 @@ def sql_node(
     ``spark.sql`` returns a lazy DataFrame like every other node, so
     Catalyst still fuses the SQL fragment with the surrounding DAG
     plan — mixing SQL nodes and DataFrame nodes costs nothing.
-    (Temp views are session-scoped: concurrent DAGs in one session
-    should use distinct view names.)
+    ``spark.sql`` analyzes the statement eagerly, so the views are
+    dropped as soon as it returns and nothing outlives the call. (Temp
+    views are session-scoped: concurrent DAGs in one session should
+    use distinct view names.)
     """
 
     sig = inspect.Signature(
@@ -559,7 +550,12 @@ def sql_node(
         dfs = [bound.arguments[v] for v in views]
         for vname, df in zip(views, dfs):
             df.createOrReplaceTempView(vname)
-        return dfs[0].sparkSession.sql(query)
+        spark = dfs[0].sparkSession
+        try:
+            return spark.sql(query)
+        finally:
+            for vname in views:
+                spark.catalog.dropTempView(vname)
 
     _impl.__signature__ = sig
     _impl.__name__ = name or "sql"

@@ -1,24 +1,355 @@
-"""A query executed THROUGH the DAG engine (not a plain function).
+"""The registry's queries executed THROUGH the DAG engine.
 
-Everything else in the registry calls the DataFrame API directly; this
-entry builds an ``MLDag`` — two source nodes, a join node, an
-aggregate node, wired with the piping DSL — and runs its transform
-pass, so the engine's construction/routing/scheduling path itself sits
-inside the driver's DuckDB correctness gate.
+Everything else in the registry calls the DataFrame API directly; each
+query here builds an ``MLDag`` from piped nodes and runs it, so the
+engine's construction/routing/scheduling path — and, for the estimator
+pipelines, its fit pass — sits inside the driver's DuckDB correctness
+gate:
+
+- relational: priority revenue (two sources → join → aggregate) and
+  its ``sql_node`` twin (top-3 open-order priorities);
+- ML: a ``StandardScaler`` fit, a trained quality classifier, and the
+  train/test fit-apply pipeline;
+- text: corpus cleaning, the export shard/batch plan, the end-to-end
+  clean → dedup → gate → decontaminate → pack pipeline, and the
+  fuzzy-dedup chain.
+
+Every node body is defined once, in the node library below; the query
+functions and the public ``build_*_dag`` builders only wire. Being
+module-level functions, the bodies also pickle, so every
+``build_*_dag`` round-trips through ``persistence.save_dag``/
+``load_dag``. Sources read through ``SparkSession.active()`` for the
+same reason.
+
+The ``docs_src → clean → dedup_exact`` front half shared by the
+clean_pack and fit_apply pipelines is wired by ``_front_half``, flat
+into the caller's DAG rather than as a nested ``MLDagNode``: a nested
+DAG runs with its own empty mixin list (the caller's hooks and spans
+would never see its nodes), and under ``fit_transform`` the outer node
+would run the inner fit pass and then a second, transform-only pass.
 
 Because every node hands its downstream a *lazy* DataFrame, the DAG
 boundary adds zero execution cost: Catalyst sees one fused plan
-(broadcast-joined, partially aggregated) identical to the hand-written
-equivalent — the core design claim of the rebuild (SURVEY.md §1.3).
+identical to the hand-written equivalent — the core design claim of
+the rebuild (SURVEY.md §1.3).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.window import Window
 
 import mldag_spark as m
+from mldag_spark.functions import fingerprint, shingle_rows, tokenize
+from mldag_spark.operators.dedup import minhash_lsh_pairs_rows
+from mldag_spark.operators.packing import token_budget_batches
 from mldag_spark.queries import register
 from mldag_spark.queries.tables import dsum, load
+
+# ----------------------------------------------------------------------
+# node library: every stage body, defined once
+# ----------------------------------------------------------------------
+
+
+def load_orders(sf_dir):
+    return load(SparkSession.active(), sf_dir, "orders")
+
+
+def load_lineitem(sf_dir):
+    return load(SparkSession.active(), sf_dir, "lineitem")
+
+
+def load_documents(sf_dir):
+    return load(SparkSession.active(), sf_dir, "documents")
+
+
+def load_vectors(sf_dir):
+    from pyspark.ml.functions import array_to_vector
+
+    return load(SparkSession.active(), sf_dir, "embeddings").select(
+        "vec_id",
+        "label",
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("v"),
+    )
+
+
+def join_facts(orders, lineitem):
+    return orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
+
+
+def priority_revenue(joined):
+    return joined.groupBy("o_orderpriority").agg(
+        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2).alias(
+            "revenue"
+        ),
+        F.count(F.lit(1)).alias("n_lines"),
+    )
+
+
+def label_stats(df):
+    from pyspark.ml.functions import vector_to_array
+
+    x0 = vector_to_array(F.col("scaled")).getItem(0)
+    return (
+        df.select("label", x0.alias("x0"))
+        .groupBy("label")
+        .agg(
+            F.count(F.lit(1)).alias("n_vecs"),
+            F.round(F.avg("x0"), 3).alias("avg_scaled_x0"),
+        )
+    )
+
+
+# The lazy checkpoint (no text column: ids, three doubles, label,
+# features vector) is written by the eager LBFGS fit on the train
+# subset, so the caller's action on the rollup leaf scores the
+# materialized features instead of re-tokenizing the corpus. It is
+# truly lazy only because no exchange sits below it: under AQE,
+# localCheckpoint(eager=False) runs every shuffle and broadcast
+# stage below it at the call (tests/test_dedup_closure.py).
+def quality_features(sf_dir):
+    from pyspark.ml.feature import VectorAssembler
+
+    toks = tokenize(F.col("text"))
+    n_tok = F.size(toks).cast("double")
+    feats = load_documents(sf_dir).select(
+        "doc_id",
+        "lang",
+        n_tok.alias("f_tokens"),
+        (F.length("text").cast("double") / n_tok).alias("f_avg_tok_len"),
+        (F.size(F.array_distinct(toks)).cast("double") / n_tok).alias(
+            "f_distinct_ratio"
+        ),
+    ).withColumn(
+        # weak label: lexical diversity above a fixed threshold — a
+        # deterministic stand-in for human quality ratings
+        "label",
+        (F.col("f_distinct_ratio") >= 0.55).cast("double"),
+    )
+    return VectorAssembler(
+        inputCols=["f_tokens", "f_avg_tok_len", "f_distinct_ratio"],
+        outputCol="features",
+    ).transform(feats).localCheckpoint(eager=False)
+
+
+def train_subset(df):
+    # content-free deterministic ~50% split (same md5-bucket trick as
+    # sample_deterministic_split)
+    bucket = (
+        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
+        .cast("long")
+        % 2
+    )
+    return df.filter(bucket == 0)
+
+
+def quality_rollup(df):
+    return df.groupBy(
+        "lang", F.col("prediction").cast("int").alias("predicted_ok")
+    ).agg(F.count(F.lit(1)).alias("n_docs"))
+
+
+def quality_filter(docs):
+    toks = tokenize(F.col("text"))
+    n = F.size(toks)
+    distinct_ratio = F.size(F.array_distinct(toks)).cast("double") / n
+    return docs.select(
+        "doc_id", "lang", fingerprint(F.col("text")).alias("fp"),
+        n.alias("n"), distinct_ratio.alias("dr"),
+    ).filter(F.col("n").between(5, 1000) & (F.col("dr") > 0.3))
+
+
+def dedup_keep_first(docs):
+    w = Window.partitionBy("fp").orderBy("doc_id")
+    return (
+        docs.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
+def lang_rollup(docs):
+    return docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
+
+
+def shuffle_coords(docs):
+    hv = F.conv(
+        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
+    ).cast("long")
+    w = Window.partitionBy("shard_id").orderBy("hv", "doc_id")
+    return (
+        docs.select("doc_id", "n_chars", hv.alias("hv"))
+        .withColumn("shard_id", F.col("hv") % 8)
+        .select(
+            "doc_id",
+            "n_chars",
+            "shard_id",
+            F.row_number().over(w).cast("long").alias("pos"),
+        )
+    )
+
+
+def char_budget_batches(coords, budget=20000):
+    w = (
+        Window.partitionBy("shard_id")
+        .orderBy("pos")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = F.sum("n_chars").over(w)
+    return coords.select(
+        "doc_id",
+        "shard_id",
+        "pos",
+        cum.cast("long").alias("shard_cum"),
+        F.floor((cum - F.col("n_chars")) / float(budget))
+        .cast("long")
+        .alias("batch_id"),
+    )
+
+
+# The clean/dedup/gate stage bodies are the shared front-half contract
+# of queries/text.py — one definition across these DAGs and the
+# streaming twin. lang rides along for fit_apply's per-lang stats;
+# clean_pack never reads it, so Catalyst prunes it from that plan.
+def clean(docs):
+    return pipeline_clean_stage(docs, "lang")
+
+
+def dedup_exact(cleaned):
+    return pipeline_dedup_stage(cleaned)
+
+
+def quality_gate(deduped):
+    n, _dr, keep = pipeline_gate_exprs()
+    return deduped.select("doc_id", "clean", n.alias("n_tokens")).filter(keep)
+
+
+def decontaminate(scored):
+    # the contamination RULE (bucket split, shingle width, >= 3 shared)
+    # lives in contaminated_train_ids, shared with
+    # text_decontaminate_filter so the stage query and the composed
+    # pipeline cannot drift
+    #
+    # Don't recompute what you can reuse: the gated corpus feeds THREE
+    # consumers (the test-split shingle branch, the train-split shingle
+    # branch, the kept filter), and the packer downstream re-evaluates
+    # its input lineage twice more plus an eager quantile action —
+    # without a reuse point the executed plan ran the scan →
+    # regex-clean → md5-dedup-window front half SIX times (6 parquet
+    # scans, 0 ReusedExchange; AQE cannot reuse because each branch
+    # projects/filters differently right above the shared subtree). A
+    # localCheckpoint(eager=False) at the reuse point makes it run
+    # once. Not lazily: under AQE the call runs the dedup window's
+    # shuffle stage (1 job at sf0.01), and only the final stage and the
+    # block write wait for the first action (the packer's quantile
+    # job). The materialized rows are the gated SURVIVORS (doc_id,
+    # clean, n_tokens, bucket): the same bytes the dedup exchange
+    # already moved once, stored for the query's own lifetime,
+    # reclaimed by ContextCleaner when the result frame drops. Measured
+    # at sf0.1: 7.9-8.6 → 2.3-3.3 s warm, executed scans 6 → 1.
+    docs = scored.withColumn("bucket", _split_bucket()).localCheckpoint(
+        eager=False
+    )
+    dirty = contaminated_train_ids(docs, text_col="clean")
+    # no static broadcast hint: dirty is contamination-rate-sized — AQE
+    # broadcasts it when small, sort-merges when not, exactly like the
+    # stage queries (text_decontaminate_filter joins dirty unhinted)
+    return (
+        docs.filter(F.col("bucket") < 80)
+        .join(dirty, "doc_id", "left_anti")
+        .select("doc_id", "n_tokens")
+    )
+
+
+def pack(kept):
+    # same reasoning one stage later: the packer evaluates its input
+    # three times (the eager approxQuantile action, the offsets branch,
+    # the output branch) — without a reuse point each evaluation
+    # re-runs the decontamination shingle self-join. The checkpointed
+    # frame is NARROW ((doc_id, n_tokens) survivor rows). Under AQE the
+    # call itself runs the self-join's shuffle and broadcast stages
+    # (8 jobs at sf0.01).
+    kept = kept.localCheckpoint(eager=False)
+    return token_budget_batches(
+        kept, "doc_id", "n_tokens", max_tokens=4096
+    ).withColumn("global_cum", F.col("global_cum").cast("long"))
+
+
+# The checkpoint (narrow survivors: doc_id, lang, 2-double vector,
+# bucket) is written by the eager scaler.fit on the train split, so the
+# caller's action on the stats leaf reads those rows instead of
+# re-running the clean → dedup-window → gate front half. It is only
+# partly lazy: under AQE, localCheckpoint(eager=False) runs the dedup
+# window's shuffle stage at the call.
+def gated_features(deduped):
+    from pyspark.ml.functions import array_to_vector
+
+    n, dr, keep = pipeline_gate_exprs()
+    return (
+        deduped.filter(keep)
+        .select(
+            "doc_id",
+            "lang",
+            array_to_vector(F.array(n.cast("double"), dr)).alias("fv"),
+            _split_bucket().alias("bucket"),
+        )
+        .localCheckpoint(eager=False)
+    )
+
+
+def train_part(feats):
+    return feats.filter(F.col("bucket") < 80)
+
+
+def held_out_part(feats):
+    return feats.filter(F.col("bucket") >= 90)
+
+
+def held_out_stats(df):
+    from pyspark.ml.functions import vector_to_array
+
+    x = vector_to_array(F.col("scaled"))
+    return (
+        df.select("lang", x.getItem(0).alias("s0"), x.getItem(1).alias("s1"))
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.round(F.avg("s0"), 3).alias("avg_scaled_len"),
+            F.round(F.avg("s1"), 3).alias("avg_scaled_div"),
+        )
+    )
+
+
+def mine_lsh(docs):
+    rows = shingle_rows(docs, "doc_id", "text", 3)
+    return minhash_lsh_pairs_rows(
+        rows, id_col="doc_id", elem_col="shingle", threshold=0.8,
+        num_hashes=64, bands=16,
+    )
+
+
+def verify_edit(pairs, docs):
+    return fuzzy_verified_pairs(docs, pairs)
+
+
+def keep_best(verified, docs):
+    return keep_best_survivors(docs, verified)
+
+
+def _front_half(dag):
+    """Wire ``docs_src → clean → dedup_exact`` flat into ``dag`` (see
+    the module docstring for why not nested); returns ``dedup_exact``."""
+    return (
+        dag["sf_dir"]
+        >> m.as_node(load_documents, name="docs_src")
+        >> m.as_node(clean, name="clean")
+        >> m.as_node(dedup_exact, name="dedup_exact")
+    )
+
+
+# ----------------------------------------------------------------------
+# registered queries and their builders
+# ----------------------------------------------------------------------
 
 
 @register(
@@ -35,27 +366,10 @@ from mldag_spark.queries.tables import dsum, load
 def dag_pipeline_priority_revenue(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
+    """Two source nodes, a join node and an aggregate node, wired with
+    the piping DSL; Catalyst sees one broadcast-joined, partially
+    aggregated plan."""
     dag = m.MLDag()
-
-    def load_orders(sf_dir):
-        return load(spark, sf_dir, "orders")
-
-    def load_lineitem(sf_dir):
-        return load(spark, sf_dir, "lineitem")
-
-    def join_facts(orders, lineitem):
-        return orders.join(
-            lineitem, orders.o_orderkey == lineitem.l_orderkey
-        )
-
-    def priority_revenue(joined):
-        return joined.groupBy("o_orderpriority").agg(
-            dsum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")), 2
-            ).alias("revenue"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-
     o_node = dag["sf_dir"] >> m.as_node(load_orders, name="orders_src")
     l_node = dag["sf_dir"] >> m.as_node(load_lineitem, name="lineitem_src")
     j_node = m.as_node(join_facts, name="join_facts")
@@ -94,30 +408,8 @@ def dag_ml_standard_scaler(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1-magnitude values the rounding boundary is ~1e12 times wider
     than the noise."""
     from pyspark.ml.feature import StandardScaler
-    from pyspark.ml.functions import array_to_vector, vector_to_array
 
     dag = m.MLDag()
-
-    def load_vectors(sf_dir):
-        return load(spark, sf_dir, "embeddings").select(
-            "vec_id",
-            "label",
-            array_to_vector(
-                F.col("embedding").cast("array<double>")
-            ).alias("v"),
-        )
-
-    def label_stats(df):
-        x0 = vector_to_array(F.col("scaled")).getItem(0)
-        return (
-            df.select("label", x0.alias("x0"))
-            .groupBy("label")
-            .agg(
-                F.count(F.lit(1)).alias("n_vecs"),
-                F.round(F.avg("x0"), 3).alias("avg_scaled_x0"),
-            )
-        )
-
     src = dag["sf_dir"] >> m.as_node(load_vectors, name="vectors_src")
     scaler = m.EstimatorNode(
         StandardScaler(
@@ -163,38 +455,10 @@ def dag_text_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes a lazy DataFrame, so Catalyst fuses the whole pipeline into
     one plan — the filter reaches the scan, the dedup window is the
     only wide shuffle, and the rollup is map-side partial."""
-    from pyspark.sql.window import Window
-
-    from mldag_spark.functions import fingerprint, tokenize
-
     dag = m.MLDag()
-
-    def load_docs(sf_dir):
-        return load(spark, sf_dir, "documents")
-
-    def quality_filter(docs):
-        toks = tokenize(F.col("text"))
-        n = F.size(toks)
-        distinct_ratio = F.size(F.array_distinct(toks)).cast("double") / n
-        return docs.select(
-            "doc_id", "lang", fingerprint(F.col("text")).alias("fp"),
-            n.alias("n"), distinct_ratio.alias("dr"),
-        ).filter(F.col("n").between(5, 1000) & (F.col("dr") > 0.3))
-
-    def dedup_keep_first(docs):
-        w = Window.partitionBy("fp").orderBy("doc_id")
-        return (
-            docs.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
-    def lang_rollup(docs):
-        return docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
-
-    src = dag["sf_dir"] >> m.as_node(load_docs, name="docs_src")
     cleaned = (
-        src
+        dag["sf_dir"]
+        >> m.as_node(load_documents, name="docs_src")
         >> m.as_node(quality_filter, name="quality_filter")
         >> m.as_node(dedup_keep_first, name="dedup_keep_first")
         >> m.as_node(lang_rollup, name="lang_rollup")
@@ -230,13 +494,6 @@ def dag_sql_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``spark.sql`` yields a lazy DataFrame, so Catalyst fuses the SQL
     fragment with the DAG plan exactly like the DataFrame nodes."""
     dag = m.MLDag()
-
-    def load_orders(sf_dir):
-        return load(spark, sf_dir, "orders")
-
-    def load_lineitem(sf_dir):
-        return load(spark, sf_dir, "lineitem")
-
     o_node = dag["sf_dir"] >> m.as_node(load_orders, name="orders_src")
     l_node = dag["sf_dir"] >> m.as_node(load_lineitem, name="lineitem_src")
     q = m.sql_node(
@@ -294,48 +551,7 @@ def dag_export_shard_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed here; the shard layout materializes them.
     """
     dag = m.MLDag()
-
-    def load_docs(sf_dir):
-        return load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-
-    def shuffle_coords(docs):
-        hv = F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("shard_id").orderBy("hv", "doc_id")
-        return (
-            docs.select("doc_id", "n_chars", hv.alias("hv"))
-            .withColumn("shard_id", F.col("hv") % 8)
-            .select(
-                "doc_id",
-                "n_chars",
-                "shard_id",
-                F.row_number().over(w).cast("long").alias("pos"),
-            )
-        )
-
-    def char_budget_batches(coords, budget=20000):
-        from pyspark.sql.window import Window
-
-        w = (
-            Window.partitionBy("shard_id")
-            .orderBy("pos")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        cum = F.sum("n_chars").over(w)
-        return coords.select(
-            "doc_id",
-            "shard_id",
-            "pos",
-            cum.cast("long").alias("shard_cum"),
-            F.floor((cum - F.col("n_chars")) / float(budget))
-            .cast("long")
-            .alias("batch_id"),
-        )
-
-    src = dag["sf_dir"] >> m.as_node(load_docs, name="docs_src")
+    src = dag["sf_dir"] >> m.as_node(load_documents, name="docs_src")
     coords = src >> m.as_node(shuffle_coords, name="shuffle_coords")
     batches = coords >> m.as_node(char_budget_batches, name="char_batches")
     batches["result"] >> dag["export_plan"]
@@ -367,62 +583,18 @@ def dag_ml_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a deterministic lexical-diversity rule, so the run is
     reproducible end to end — no rand() anywhere.
     """
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import VectorAssembler
+    dag = build_quality_classifier_dag(spark)
+    run = dag.fit_transform(sf_dir)
+    return run.outputs["quality_counts"]
 
-    from mldag_spark.functions import tokenize
+
+def build_quality_classifier_dag(spark: SparkSession):
+    """The five-node featurize → train subset → LogisticRegression →
+    apply-to-all → rollup DAG behind ``dag_ml_quality_classifier``."""
+    from pyspark.ml.classification import LogisticRegression
 
     dag = m.MLDag()
-
-    # The lazy checkpoint (no text column: ids, three doubles, label,
-    # features vector) is written by the eager LBFGS fit on the train
-    # subset, so the caller's action on the rollup leaf scores the
-    # materialized features instead of re-tokenizing the corpus. It is
-    # truly lazy only because no exchange sits below it: under AQE,
-    # localCheckpoint(eager=False) runs every shuffle and broadcast
-    # stage below it at the call (tests/test_dedup_closure.py).
-    def featurize(sf_dir):
-        d = load(spark, sf_dir, "documents")
-        toks = tokenize(F.col("text"))
-        n_tok = F.size(toks).cast("double")
-        feats = d.select(
-            "doc_id",
-            "lang",
-            n_tok.alias("f_tokens"),
-            (F.length("text").cast("double") / n_tok).alias("f_avg_tok_len"),
-            (F.size(F.array_distinct(toks)).cast("double") / n_tok).alias(
-                "f_distinct_ratio"
-            ),
-        ).withColumn(
-            # weak label: lexical diversity above a fixed threshold —
-            # a deterministic stand-in for human quality ratings
-            "label",
-            (F.col("f_distinct_ratio") >= 0.55).cast("double"),
-        )
-        return VectorAssembler(
-            inputCols=["f_tokens", "f_avg_tok_len", "f_distinct_ratio"],
-            outputCol="features",
-        ).transform(feats).localCheckpoint(eager=False)
-
-    def train_subset(df):
-        # content-free deterministic ~50% split (same md5-bucket trick
-        # as sample_deterministic_split)
-        bucket = (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                16,
-                10,
-            ).cast("long")
-            % 2
-        )
-        return df.filter(bucket == 0)
-
-    def rollup(df):
-        return df.groupBy(
-            "lang", F.col("prediction").cast("int").alias("predicted_ok")
-        ).agg(F.count(F.lit(1)).alias("n_docs"))
-
-    src = dag["sf_dir"] >> m.as_node(featurize, name="featurize")
+    src = dag["sf_dir"] >> m.as_node(quality_features, name="featurize")
     tr = src >> m.as_node(train_subset, name="train_subset")
     lr = m.EstimatorNode(
         LogisticRegression(
@@ -436,35 +608,41 @@ def dag_ml_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr >> lr
     apply_all = m.TransformNode(lr, name="apply_all")
     src >> apply_all
-    out = apply_all >> m.as_node(rollup, name="quality_rollup")
+    out = apply_all >> m.as_node(quality_rollup, name="quality_rollup")
     out["result"] >> dag["quality_counts"]
-
-    run = dag.fit_transform(sf_dir)
-    return run.outputs["quality_counts"]
+    return dag
 
 
-@register(
-    "dag_pipeline_clean_pack",
-    oracle="""
-    WITH cleaned AS (
-        SELECT doc_id,
+# docs_src → clean → dedup_exact → quality gate, shared VERBATIM by the
+# clean_pack and fit_apply oracles (the replay of _front_half plus
+# pipeline_gate_exprs' token-band and diversity floor)
+_FRONT_HALF_ORACLE_CTES = """cleaned AS (
+        SELECT doc_id, lang,
                trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS clean
         FROM documents
     ), dedup AS (
-        SELECT doc_id, clean FROM (
-            SELECT doc_id, clean,
+        SELECT doc_id, lang, clean FROM (
+            SELECT doc_id, lang, clean,
                    ROW_NUMBER() OVER (
                        PARTITION BY md5(clean) ORDER BY doc_id
                    ) AS rk
             FROM cleaned
         ) WHERE rk = 1
-    ), scored AS (
-        SELECT doc_id, clean,
-               len(string_split(clean, ' ')) AS n_tokens
-        FROM dedup
+    ), gated AS (
+        SELECT * FROM dedup
         WHERE len(string_split(clean, ' ')) BETWEEN 5 AND 1000
           AND CAST(len(list_distinct(string_split(clean, ' '))) AS DOUBLE)
               / len(string_split(clean, ' ')) > 0.3
+    )"""
+
+
+@register(
+    "dag_pipeline_clean_pack",
+    oracle=f"""
+    WITH {_FRONT_HALF_ORACLE_CTES}, scored AS (
+        SELECT doc_id, clean,
+               len(string_split(clean, ' ')) AS n_tokens
+        FROM gated
     ), b AS (
         SELECT doc_id, n_tokens, clean,
                ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
@@ -539,96 +717,9 @@ def build_clean_pack_dag(spark: SparkSession):
     """The six-node clean → dedup → score → decontaminate → pack DAG
     behind ``dag_pipeline_clean_pack``, exposed so the physical-view
     golden (tests/test_display.py) can explain the composed run."""
-    from mldag_spark.operators.packing import token_budget_batches
-    from mldag_spark.queries.text import (
-        _split_bucket,
-        contaminated_train_ids,
-        pipeline_clean_stage,
-        pipeline_dedup_stage,
-        pipeline_gate_exprs,
-    )
-
     dag = m.MLDag()
-
-    def load_docs(sf_dir):
-        return load(spark, sf_dir, "documents")
-
-    # the clean/dedup/gate stage bodies are the SHARED front-half
-    # contract (queries/text.py) — one definition across this DAG,
-    # the fit_apply variant, and the streaming twin (code-review
-    # r14 #6); node names stay pinned by the physical-view golden
-    def clean(docs):
-        return pipeline_clean_stage(docs)
-
-    def dedup_exact(cleaned):
-        return pipeline_dedup_stage(cleaned)
-
-    def quality_gate(deduped):
-        n, _dr, keep = pipeline_gate_exprs()
-        return deduped.select(
-            "doc_id", "clean", n.alias("n_tokens")
-        ).filter(keep)
-
-    def decontaminate(scored):
-        # the contamination RULE (bucket split, shingle width,
-        # >= 3 shared) lives in contaminated_train_ids, shared with
-        # text_decontaminate_filter so the stage query and the
-        # composed pipeline cannot drift (code-review r13 #3)
-        #
-        # r16 (guide §1.2 — don't recompute what you can reuse): the
-        # gated corpus feeds THREE consumers (the test-split shingle
-        # branch, the train-split shingle branch, the kept filter),
-        # and the packer downstream re-evaluates its input lineage
-        # twice more plus an eager quantile action — the measured
-        # executed plan ran the scan → regex-clean → md5-dedup-window
-        # front half SIX times (6 parquet scans, 0 ReusedExchange;
-        # AQE cannot reuse because each branch projects/filters
-        # differently right above the shared subtree). A
-        # localCheckpoint(eager=False) at the reuse point — the
-        # established r15 idiom (edit-verify miner, text single-scan) —
-        # makes it run once. Not lazily: under AQE the call runs the
-        # dedup window's shuffle stage (1 job at sf0.01), and only the
-        # final stage and the block write wait for the first action
-        # (the packer's quantile job). The materialized rows are
-        # the gated SURVIVORS (doc_id, clean, n_tokens, bucket): the
-        # same bytes the dedup exchange already moved once, stored
-        # for the query's own lifetime, reclaimed by ContextCleaner
-        # when the result frame drops. Measured at sf0.1: 7.9-8.6 →
-        # 2.3-3.3 s warm, executed scans 6 → 1; oracle hash-green at
-        # sf0.001 AND sf0.01.
-        docs = scored.withColumn(
-            "bucket", _split_bucket()
-        ).localCheckpoint(eager=False)
-        dirty = contaminated_train_ids(docs, text_col="clean")
-        # no static broadcast hint (r15 broadcast audit): dirty is
-        # contamination-rate-sized — AQE broadcasts it when small,
-        # sort-merges when not, exactly like the stage queries
-        # (text_decontaminate_filter joins dirty unhinted)
-        return (
-            docs.filter(F.col("bucket") < 80)
-            .join(dirty, "doc_id", "left_anti")
-            .select("doc_id", "n_tokens")
-        )
-
-    def pack(kept):
-        # r16, same §1.2 reasoning one stage later: the packer
-        # evaluates its input three times (the eager approxQuantile
-        # action, the offsets branch, the output branch) — without a
-        # reuse point each evaluation re-runs the decontamination
-        # shingle self-join. The checkpointed frame is NARROW
-        # ((doc_id, n_tokens) survivor rows). Under AQE the call
-        # itself runs the self-join's shuffle and broadcast stages
-        # (8 jobs at sf0.01).
-        kept = kept.localCheckpoint(eager=False)
-        return token_budget_batches(
-            kept, "doc_id", "n_tokens", max_tokens=4096
-        ).withColumn("global_cum", F.col("global_cum").cast("long"))
-
     pipe = (
-        dag["sf_dir"]
-        >> m.as_node(load_docs, name="docs_src")
-        >> m.as_node(clean, name="clean")
-        >> m.as_node(dedup_exact, name="dedup_exact")
+        _front_half(dag)
         >> m.as_node(quality_gate, name="quality_gate")
         >> m.as_node(decontaminate, name="decontaminate")
         >> m.as_node(pack, name="pack")
@@ -639,30 +730,15 @@ def build_clean_pack_dag(spark: SparkSession):
 
 @register(
     "dag_pipeline_fit_apply",
-    oracle="""
-    WITH cleaned AS (
-        SELECT doc_id, lang,
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS clean
-        FROM documents
-    ), dedup AS (
-        SELECT doc_id, lang, clean FROM (
-            SELECT doc_id, lang, clean,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY md5(clean) ORDER BY doc_id
-                   ) AS rk
-            FROM cleaned
-        ) WHERE rk = 1
-    ), feats AS (
+    oracle=f"""
+    WITH {_FRONT_HALF_ORACLE_CTES}, feats AS (
         SELECT doc_id, lang,
                CAST(len(string_split(clean, ' ')) AS DOUBLE) AS n_tokens,
                CAST(len(list_distinct(string_split(clean, ' '))) AS DOUBLE)
                    / len(string_split(clean, ' ')) AS dr,
                ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
                  % 100 AS bucket
-        FROM dedup
-        WHERE len(string_split(clean, ' ')) BETWEEN 5 AND 1000
-          AND CAST(len(list_distinct(string_split(clean, ' '))) AS DOUBLE)
-              / len(string_split(clean, ' ')) > 0.3
+        FROM gated
     ), st AS (
         SELECT AVG(n_tokens) AS m0, STDDEV_SAMP(n_tokens) AS s0,
                AVG(dr) AS m1, STDDEV_SAMP(dr) AS s1
@@ -707,78 +783,11 @@ def build_fit_apply_dag(spark: SparkSession):
     ``dag_pipeline_fit_apply``, exposed for the physical-view golden
     (tests/test_display.py)."""
     from pyspark.ml.feature import StandardScaler
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    from mldag_spark.queries.text import (
-        _split_bucket,
-        pipeline_clean_stage,
-        pipeline_dedup_stage,
-        pipeline_gate_exprs,
-    )
 
     dag = m.MLDag()
-
-    def load_docs(sf_dir):
-        return load(spark, sf_dir, "documents")
-
-    # shared front-half contract (queries/text.py) — see
-    # build_clean_pack_dag; lang rides along for the per-lang stats
-    def clean(docs):
-        return pipeline_clean_stage(docs, "lang")
-
-    def dedup_exact(cleaned):
-        return pipeline_dedup_stage(cleaned)
-
-    # The checkpoint (narrow survivors: doc_id, lang, 2-double vector,
-    # bucket) is written by the eager scaler.fit on the train split, so
-    # the caller's action on the stats leaf reads those rows instead of
-    # re-running the clean → dedup-window → gate front half. It is only
-    # partly lazy: under AQE, localCheckpoint(eager=False) runs the
-    # dedup window's shuffle stage at the call.
-    def featurize(deduped):
-        n, dr, keep = pipeline_gate_exprs()
-        return (
-            deduped.filter(keep)
-            .select(
-                "doc_id",
-                "lang",
-                array_to_vector(F.array(n.cast("double"), dr)).alias("fv"),
-                _split_bucket().alias("bucket"),
-            )
-            .localCheckpoint(eager=False)
-        )
-
-    def train_split(feats):
-        return feats.filter(F.col("bucket") < 80)
-
-    def test_split(feats):
-        return feats.filter(F.col("bucket") >= 90)
-
-    def test_stats(df):
-        x = vector_to_array(F.col("scaled"))
-        return (
-            df.select(
-                "lang",
-                x.getItem(0).alias("s0"),
-                x.getItem(1).alias("s1"),
-            )
-            .groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.round(F.avg("s0"), 3).alias("avg_scaled_len"),
-                F.round(F.avg("s1"), 3).alias("avg_scaled_div"),
-            )
-        )
-
-    feats = (
-        dag["sf_dir"]
-        >> m.as_node(load_docs, name="docs_src")
-        >> m.as_node(clean, name="clean")
-        >> m.as_node(dedup_exact, name="dedup_exact")
-        >> m.as_node(featurize, name="featurize")
-    )
-    tr = feats >> m.as_node(train_split, name="train_split")
-    te = feats >> m.as_node(test_split, name="test_split")
+    feats = _front_half(dag) >> m.as_node(gated_features, name="featurize")
+    tr = feats >> m.as_node(train_part, name="train_split")
+    te = feats >> m.as_node(held_out_part, name="test_split")
     scaler = m.EstimatorNode(
         StandardScaler(
             inputCol="fv", outputCol="scaled", withMean=True, withStd=True
@@ -788,7 +797,7 @@ def build_fit_apply_dag(spark: SparkSession):
     tr >> scaler
     apply_test = m.as_transform("scaler", name="scaler_test")
     te >> apply_test
-    stats = apply_test >> m.as_node(test_stats, name="test_stats")
+    stats = apply_test >> m.as_node(held_out_stats, name="test_stats")
     stats["result"] >> dag["fit_apply_stats"]
     return dag
 
@@ -822,32 +831,8 @@ def build_fuzzy_dedup_dag(spark: SparkSession):
     """The four-node mine → verify → keep-best DAG behind
     ``dag_pipeline_fuzzy_dedup``, exposed for the physical-view
     golden (tests/test_display.py)."""
-    from mldag_spark.functions import shingle_rows
-    from mldag_spark.operators.dedup import minhash_lsh_pairs_rows
-    from mldag_spark.queries.text import (
-        fuzzy_verified_pairs,
-        keep_best_survivors,
-    )
-
     dag = m.MLDag()
-
-    def load_docs(sf_dir):
-        return load(spark, sf_dir, "documents")
-
-    def mine_lsh(docs):
-        rows = shingle_rows(docs, "doc_id", "text", 3)
-        return minhash_lsh_pairs_rows(
-            rows, id_col="doc_id", elem_col="shingle", threshold=0.8,
-            num_hashes=64, bands=16,
-        )
-
-    def verify_edit(pairs, docs):
-        return fuzzy_verified_pairs(docs, pairs)
-
-    def keep_best(verified, docs):
-        return keep_best_survivors(docs, verified)
-
-    d_node = dag["sf_dir"] >> m.as_node(load_docs, name="docs_src")
+    d_node = dag["sf_dir"] >> m.as_node(load_documents, name="docs_src")
     miner = d_node >> m.as_node(mine_lsh, name="mine_lsh")
     verify = m.as_node(verify_edit, name="verify_edit")
     miner["result"] >> verify["pairs"]
@@ -859,11 +844,23 @@ def build_fuzzy_dedup_dag(spark: SparkSession):
     return dag
 
 
+# Imported last so this module's queries register ahead of text's, in
+# the registry's established order; the stage bodies above resolve
+# these names at call time.
+from mldag_spark.queries import ORACLES as _ORACLES  # noqa: E402
+from mldag_spark.queries.text import (  # noqa: E402
+    _FUZZY_PIPELINE_ORACLE,
+    _split_bucket,
+    contaminated_train_ids,
+    fuzzy_verified_pairs,
+    keep_best_survivors,
+    pipeline_clean_stage,
+    pipeline_dedup_stage,
+    pipeline_gate_exprs,
+)
+
 # DAG-engine/hand-written parity: the composition gates against the
 # SAME relational replay as the direct query (the stream twin
 # convention — sharing the oracle VERBATIM means the two can never
 # drift).
-from mldag_spark.queries import ORACLES as _ORACLES  # noqa: E402
-from mldag_spark.queries.text import _FUZZY_PIPELINE_ORACLE  # noqa: E402
-
 _ORACLES["dag_pipeline_fuzzy_dedup"] = _FUZZY_PIPELINE_ORACLE

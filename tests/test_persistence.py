@@ -4,6 +4,7 @@ ours must actually round-trip)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import mldag_spark as m
@@ -119,3 +120,34 @@ def test_roundtrip_preserves_input_default_and_kind(tmp_path, spark, sf_dir):
     want = dag.transform(li).outputs["out"].collect()
     got = back.transform(li).outputs["out"].collect()  # default applies
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "builder, output, fitted",
+    [
+        ("build_clean_pack_dag", "packed_corpus", False),
+        ("build_fuzzy_dedup_dag", "survivors", False),
+        ("build_fit_apply_dag", "fit_apply_stats", True),
+        ("build_quality_classifier_dag", "quality_counts", True),
+    ],
+)
+def test_pipeline_builder_roundtrip(tmp_path, spark, sf_dir, builder, output,
+                                    fitted):
+    """Every registry ``build_*_dag`` saves and loads with no overrides
+    (its node bodies are module-level, so they pickle), and the loaded
+    DAG's transform yields the same rows as the original's — after
+    ``fit_transform`` for the pipelines with an estimator, so the
+    persisted fitted model is what gets applied."""
+    from mldag_spark.queries import dag_pipeline
+
+    dag = getattr(dag_pipeline, builder)(spark)
+    if fitted:
+        dag.fit_transform(sf_dir)
+    save_dag(dag, str(tmp_path / "dag"))
+    back = load_dag(str(tmp_path / "dag"))
+    assert list(back.node_dict) == list(dag.node_dict)
+
+    def rows(d):
+        return sorted(map(tuple, d.transform(sf_dir).outputs[output].collect()))
+
+    assert rows(back) == rows(dag)
