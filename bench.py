@@ -11,8 +11,10 @@ directory; run ``REPEATS`` timed passes, each gated on two fixed-work
 host probes; then A/B the previous code's headline builders against
 the current ones in the same session (the canary). Each query is
 timed as a full action (``df.write.format("noop")``), which executes
-the whole plan without driver-side collection. Per-pass readings go
-to ``$SPARK_GRAFT_DETAIL`` (default BENCH_DETAIL.json).
+the whole plan without driver-side collection; outside the canary it
+runs in its own ``materialize.scope()``, closed after the wall is
+taken. Per-pass readings go to ``$SPARK_GRAFT_DETAIL`` (default
+BENCH_DETAIL.json).
 """
 
 from __future__ import annotations
@@ -224,7 +226,9 @@ def _load_prev_registry(workdir: str, ref: str) -> dict:
 def bench_canary(spark, sf_dir: str, qs_current, repeats: int = 2) -> dict:
     """Interleaved previous-vs-current timing of CANARY in one session.
     Host speed hits both versions alike and cancels in the ratio
-    (<1 = current code faster); only the code delta survives."""
+    (<1 = current code faster); only the code delta survives. Both
+    sides run without a ``materialize.scope()``: the previous registry
+    may predate it, and the two must run alike."""
     import shutil
     import tempfile
 
@@ -375,6 +379,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from mldag_spark.materialize import scope
     from mldag_spark.session import recommended_session_confs
 
     builder = (
@@ -404,7 +409,8 @@ def main() -> int:
     if os.path.isdir(warm_dir):
         for name in HEADLINE:
             try:
-                run(name, warm_dir)
+                with scope():
+                    run(name, warm_dir)
             except Exception:
                 pass
     codegen_probe(spark)
@@ -418,13 +424,15 @@ def main() -> int:
         probe_attempts.append(attempts)
         shuffle_attempts.append(sh_attempts)
         for name in HEADLINE:
-            t0 = time.time()
-            try:
-                run(name, sf_dir)
-                runs[name].append(round(time.time() - t0, 3))
-            except Exception as e:  # keep the bench line parseable on error
-                print(f"bench error in {name}: {e}", file=sys.stderr)
-                runs[name].append(-1.0)
+            # released after the wall is taken, outside the timing
+            with scope():
+                t0 = time.time()
+                try:
+                    run(name, sf_dir)
+                    runs[name].append(round(time.time() - t0, 3))
+                except Exception as e:  # keep the bench line parseable
+                    print(f"bench error in {name}: {e}", file=sys.stderr)
+                    runs[name].append(-1.0)
     pass_probe = [a[-1] for a in probe_attempts]
     pass_shuffle = [a[-1] for a in shuffle_attempts]
 

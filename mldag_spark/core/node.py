@@ -565,7 +565,8 @@ def sql_node(
 def cache_node(
     name: Optional[str] = None, storage_level: str = "MEMORY_AND_DISK"
 ) -> FunctionNode:
-    """Identity node that persists the passing DataFrame.
+    """Identity node that caches the passing DataFrame
+    (:func:`mldag_spark.materialize.cache`).
 
     Spark recomputes a DataFrame's lineage for every downstream
     consumer; placing a cache node at a DAG fan-out point makes the
@@ -577,7 +578,9 @@ def cache_node(
     def _impl(df):
         from pyspark import StorageLevel
 
-        return df.persist(getattr(StorageLevel, storage_level))
+        from mldag_spark.materialize import cache
+
+        return cache(df, getattr(StorageLevel, storage_level))
 
     _impl.__name__ = name or "cache"
     return FunctionNode(func=_impl, name=_impl.__name__)
@@ -586,18 +589,18 @@ def cache_node(
 def checkpoint_node(
     name: Optional[str] = None, eager: bool = True
 ) -> FunctionNode:
-    """Identity node that truncates plan lineage via
-    ``localCheckpoint`` — for iterative DAGs whose plans otherwise grow
-    with every round (the same reason ``connected_components`` in
-    operators/dedup.py checkpoints between Large-Star/Small-Star
-    rounds). Eager by default: the cut happens at wiring time, not at
-    first downstream action. ``eager=False`` is lazy only above the
-    input's last exchange: under AQE the call still runs every shuffle
-    and broadcast stage below it; only the final stage and the block
-    write wait for the first action."""
+    """Identity node that truncates plan lineage
+    (:func:`mldag_spark.materialize.checkpoint`) — for iterative DAGs
+    whose plans otherwise grow with every round (the same reason
+    ``connected_components`` in operators/dedup.py checkpoints between
+    Large-Star/Small-Star rounds). Eager by default: the cut happens at
+    wiring time, not at first downstream action; ``checkpoint``'s
+    docstring says what ``eager=False`` still runs under AQE."""
 
     def _impl(df):
-        return df.localCheckpoint(eager=eager)
+        from mldag_spark.materialize import checkpoint
+
+        return checkpoint(df, eager=eager)
 
     _impl.__name__ = name or "checkpoint"
     return FunctionNode(func=_impl, name=_impl.__name__)

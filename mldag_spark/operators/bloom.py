@@ -36,6 +36,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Column, functions as F
 
+from mldag_spark.materialize import cache, scope
+
 BLOOM_M_BITS = 1 << 20  # registered-query default: 128 KiB bitmap
 BLOOM_K = 4
 
@@ -456,8 +458,8 @@ def bloom_build_sharded(
     # DISK_ONLY: the frame is scanned once per shard and never
     # random-accessed — buying heap with an over-2^32-element frame
     # is all cost (the connected_components checkpoint rationale)
-    df = df.persist(StorageLevel.DISK_ONLY)
-    try:
+    with scope():
+        df = cache(df, StorageLevel.DISK_ONLY)
         return [
             bloom_build(
                 df.filter((h3 % n_shards) == s), col,
@@ -465,8 +467,6 @@ def bloom_build_sharded(
             )
             for s in range(n_shards)
         ]
-    finally:
-        df.unpersist()
 
 
 def bloom_build_sized(

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from mldag_spark.materialize import checkpoint, release
+
 
 def minhash_signatures(
     df: DataFrame, id_col: str, set_col: str, num_hashes: int = 64
@@ -808,17 +810,14 @@ def connected_components(
     fixed point.
 
     Memory hygiene (hardened in r5 after an sf1.0 OOM in a 2g
-    harness; _release fixed in r6): checkpoint blocks go to DISK_ONLY
-    — an iterative algorithm's snapshots are read exactly once per
-    round, so buying heap with them is all cost — and the previous
-    round's blocks are unpersisted EXPLICITLY as soon as the new round
-    materializes. Relying on the async context cleaner (the old
-    formulation) leaves up to ``max_iter`` edge snapshots racing the
-    collector for storage; the working set must be one round's
-    snapshot (two, momentarily, while a round materializes) by
-    construction. On the star path the FINAL snapshot backs the
-    returned DataFrame and is deliberately left persisted; it is
-    reclaimed by the context cleaner once the caller drops the result.
+    harness): checkpoint blocks go to DISK_ONLY — an iterative
+    algorithm's snapshots are read exactly once per round, so buying
+    heap with them is all cost — and the previous round's blocks are
+    released EXPLICITLY as soon as the new round materializes, so the
+    working set is one round's snapshot (two, momentarily, while a
+    round materializes) by construction. On the star path the FINAL
+    snapshot backs the returned DataFrame; the caller's
+    ``materialize.scope()`` releases it.
     """
     return _components(edges, src, dst, max_iter)[0]
 
@@ -832,31 +831,19 @@ def _components(
     from pyspark import StorageLevel
     from pyspark.sql.types import IntegralType
 
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-
-    def _release(df: DataFrame) -> None:
-        # a localCheckpointed df's analyzed plan is a LogicalRDD whose
-        # `rdd` IS the checkpointed RDD; unpersisting that frees the
-        # blocks immediately (verified: getPersistentRDDs drops the
-        # entry). NOT queryExecution().toRdd() — that derives a fresh
-        # unpersisted MapPartitionsRDD over the checkpoint, and
-        # unpersisting it is a silent no-op (the r5 bug). Safe once
-        # the NEXT round is materialized — local checkpoints are
-        # declared non-fault-tolerant anyway.
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-
     # parsed SQL strings throughout the iteration builders (r16
     # construction campaign): the star rounds re-CONSTRUCT their plans
     # every iteration, so the Column-chain py4j cost repeated per
     # round (~3.7k trips per query at gate scale). Identical analyzed
     # expressions; iteration results value-gated by the convergence
     # signature + every consumer's oracle hash.
-    e = _ckpt(
+    e = checkpoint(
         edges.selectExpr(f"`{src}` AS u", f"`{dst}` AS v")
         .filter("u != v")
         .selectExpr("least(u, v) AS u", "greatest(u, v) AS v")
-        .distinct()
+        .distinct(),
+        eager=True,
+        storage_level=StorageLevel.DISK_ONLY,
     )
 
     _sig_expr = F.expr(
@@ -904,13 +891,17 @@ def _components(
         e.schema["u"].dataType, IntegralType
     ):
         labels, n_nodes = _local_components(e)
-        _release(e)
+        release(e)
         return labels, n_nodes
 
     for _ in range(max_iter):
         prev = e
-        e = _ckpt(small_star(large_star(e)))
-        _release(prev)
+        e = checkpoint(
+            small_star(large_star(e)),
+            eager=True,
+            storage_level=StorageLevel.DISK_ONLY,
+        )
+        release(prev)
         new_sig = signature(e)
         if new_sig == sig:
             break
@@ -1128,15 +1119,11 @@ def edit_similarity_pairs(
     """
     a = texts.select(F.col(id_col).alias(src), F.col(text_col).alias("_ta"))
     b = texts.select(F.col(id_col).alias(dst), F.col(text_col).alias("_tb"))
-    # Materialize the pair frame ONCE (localCheckpoint(eager=False) —
-    # the established repo idiom; ContextCleaner reclaims the blocks
-    # when the result frame is dropped, no cache-manager leak across
-    # the registry sweep). It is only PARTLY lazy: under AQE the call
-    # itself runs every shuffle and broadcast stage of the miner below
-    # it (at sf0.01 the fuzzy-dedup DAG's verify_edit node fires 4
-    # jobs with nothing else in it); only the final stage and the block
-    # write wait for the caller's action. Without it the two broadcast
-    # builds below are keyed differently (src vs dst), so they can never
+    # Materialize the pair frame ONCE: a lazy checkpoint, released by
+    # the caller's materialize.scope() (at sf0.01 the call itself fires
+    # 4 of the fuzzy-dedup DAG's verify_edit jobs; see checkpoint() on
+    # AQE). Without it the two broadcast builds below are keyed
+    # differently (src vs dst), so they can never
     # share one BroadcastExchange and each re-executes the ENTIRE miner
     # subtree feeding `pairs` — measured r15 on dedup_edit_verified: the
     # prefix-miner tail ran once per broadcast (the formatted plan
@@ -1144,7 +1131,7 @@ def edit_similarity_pairs(
     # query's executed exchanges from the miner's ~3× replication to
     # one pass + two pair-sized broadcast builds (guide §1.2: don't
     # compute things you throw away).
-    pairs = pairs.localCheckpoint(eager=False)
+    pairs = checkpoint(pairs)
     # half A carries pairs' scalar columns (jaccard etc.) so they
     # survive to the output; half B joins the DISTINCT ID projection —
     # a miner that emits the same pair d times (e.g. once per

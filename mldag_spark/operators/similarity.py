@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from mldag_spark.functions import dot, l2_norm
+from mldag_spark.materialize import checkpoint
 
 
 def _cosine_arrow():
@@ -355,7 +356,8 @@ def ivf_topk(
     # finding #1)
     qdf = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).localCheckpoint(eager=True)
+    )
+    qdf = checkpoint(qdf, eager=True)
     probe_pairs = qdf.mapInPandas(
         probe_kernel, "query_id long, cell int"
     )

@@ -47,6 +47,7 @@ from typing import NamedTuple, Optional
 from pyspark.sql import DataFrame, functions as F
 
 from mldag_spark.functions import tokenize
+from mldag_spark.materialize import cache, checkpoint, release
 
 # Start-of-symbol / end-of-symbol markers. normalize_text only
 # collapses WHITESPACE (ADVICE r13 #1 — the old comment overstated),
@@ -150,18 +151,6 @@ def merge_pattern(left: str, right: str) -> tuple[str, str]:
 # 1,024 merges on the sf0.1 vocabulary — SCALING.json
 # `bpe_merge_axis`).
 CHECKPOINT_EVERY = 64
-
-
-def _materialize_vocab(enc: DataFrame) -> DataFrame:
-    """Cut the replace-chain lineage: eagerly localCheckpoint the
-    encoded vocabulary so subsequent merges read materialized rows
-    through a fresh (depth-0) plan. Each snapshot is vocab-sized
-    (production caps via ``top_words``: ~100k words ≈ a few MB), so
-    the ceil(n_merges / CHECKPOINT_EVERY) snapshots a long run
-    accumulates are trivially memory-bounded; a reliable-storage
-    alternative with identical semantics is the parquet artifact
-    round-trip that :func:`bpe_apply` already supports."""
-    return enc.localCheckpoint(eager=True)
 
 
 # The local trainer collects the symbolized vocabulary ONCE; the cap
@@ -307,8 +296,10 @@ def bpe_learn(
     - ``"distributed"`` — the vocabulary is persisted ONCE; each
       learned merge appends one literal JVM ``replace`` to the
       expression chain, and every ``checkpoint_every`` merges the
-      encoded vocabulary is materialized (lineage cut —
-      :func:`_materialize_vocab`) so the chain restarts at depth 0.
+      encoded vocabulary is snapshotted by an eager checkpoint (a
+      lineage cut; each snapshot releases the one it supersedes, so
+      the working set is one vocab-sized snapshot) and the chain
+      restarts at depth 0.
       Per-merge cost is vocab-bounded AND merge-count-invariant
       (measured flat to 1,024 merges — SCALING.json
       ``bpe_merge_axis``) — but the invariant is ~0.9 s of Spark JOB
@@ -345,10 +336,10 @@ def bpe_learn(
     if trainer not in ("auto", "local", "distributed"):
         raise ValueError(f"unknown trainer {trainer!r}")
     vocab: Optional[DataFrame] = None
-    # everything after vocab.persist() runs under ONE try/finally that
+    # everything after cache(vocab) runs under ONE try/finally that
     # releases it: the old form relied on the merge loop's finally, so
     # a raise from the trainer count, _bpe_learn_local's setup, or
-    # symbolize()/persist() leaked the cached vocab frame across the
+    # symbolize()/cache() leaked the cached vocab frame across the
     # ~150-query registry (ADVICE r14 #4)
     try:
         if trainer == "auto":
@@ -363,7 +354,7 @@ def bpe_learn(
                 # corpus aggregate — whichever route wins reads the
                 # cached frame instead of re-running the corpus
                 # explode (ADVICE r13 #2)
-                vocab = word_vocab(docs, text_col).persist()
+                vocab = cache(word_vocab(docs, text_col))
                 measured = vocab.limit(_LOCAL_VOCAB_CAP + 1).count()
                 trainer = (
                     "local" if measured <= _LOCAL_VOCAB_CAP
@@ -373,11 +364,11 @@ def bpe_learn(
             return _bpe_learn_local(
                 docs, text_col, n_merges, top_words, vocab=vocab
             )
-        base = symbolize(
-            word_vocab(docs, text_col, top_words) if vocab is None else vocab
-        ).persist()
+        src = word_vocab(docs, text_col, top_words) if vocab is None else vocab
+        base = cache(symbolize(src))
         merges: list[Merge] = []
         enc = base
+        snap: Optional[DataFrame] = None
         chain_depth = 0
         try:
             for i in range(n_merges):
@@ -400,18 +391,20 @@ def bpe_learn(
                     checkpoint_every is not None
                     and chain_depth >= checkpoint_every
                 ):
-                    enc = _materialize_vocab(enc)
-                    chain_depth = 0
+                    enc = checkpoint(enc, eager=True)
+                    if snap is not None:
+                        release(snap)
+                    snap, chain_depth = enc, 0
         finally:
             # no cache leaks across the ~150-query registry: the
             # returned frame recomputes its (cheap, vocab-sized)
             # lineage lazily if a consumer materializes it after the
             # loop
-            base.unpersist()
+            release(base)
         return merges, enc
     finally:
         if vocab is not None:
-            vocab.unpersist()
+            release(vocab)
 
 
 def token_counts(enc: DataFrame, top_n: Optional[int] = None) -> DataFrame:
@@ -453,6 +446,7 @@ def bpe_apply(
         pairs = [(r["left_sym"], r["right_sym"]) for r in rows]
     else:
         pairs = [(m.left, m.right) for m in merges]
+    snap: Optional[DataFrame] = None
     chain_depth = 0
     for left, right in pairs:
         pat, rep = merge_pattern(left, right)
@@ -461,8 +455,10 @@ def bpe_apply(
         )
         chain_depth += 1
         if checkpoint_every is not None and chain_depth >= checkpoint_every:
-            enc = _materialize_vocab(enc)
-            chain_depth = 0
+            enc = checkpoint(enc, eager=True)
+            if snap is not None:
+                release(snap)
+            snap, chain_depth = enc, 0
     return enc
 
 

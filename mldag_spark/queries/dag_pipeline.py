@@ -41,6 +41,7 @@ from pyspark.sql.window import Window
 
 import mldag_spark as m
 from mldag_spark.functions import fingerprint, shingle_rows, tokenize
+from mldag_spark.materialize import checkpoint
 from mldag_spark.operators.dedup import minhash_lsh_pairs_rows
 from mldag_spark.operators.packing import token_budget_batches
 from mldag_spark.queries import register
@@ -103,10 +104,8 @@ def label_stats(df):
 # The lazy checkpoint (no text column: ids, three doubles, label,
 # features vector) is written by the eager LBFGS fit on the train
 # subset, so the caller's action on the rollup leaf scores the
-# materialized features instead of re-tokenizing the corpus. It is
-# truly lazy only because no exchange sits below it: under AQE,
-# localCheckpoint(eager=False) runs every shuffle and broadcast
-# stage below it at the call (tests/test_dedup_closure.py).
+# materialized features instead of re-tokenizing the corpus. No
+# exchange sits below it, so the call itself runs nothing.
 def quality_features(sf_dir):
     from pyspark.ml.feature import VectorAssembler
 
@@ -126,10 +125,12 @@ def quality_features(sf_dir):
         "label",
         (F.col("f_distinct_ratio") >= 0.55).cast("double"),
     )
-    return VectorAssembler(
-        inputCols=["f_tokens", "f_avg_tok_len", "f_distinct_ratio"],
-        outputCol="features",
-    ).transform(feats).localCheckpoint(eager=False)
+    return checkpoint(
+        VectorAssembler(
+            inputCols=["f_tokens", "f_avg_tok_len", "f_distinct_ratio"],
+            outputCol="features",
+        ).transform(feats)
+    )
 
 
 def train_subset(df):
@@ -238,18 +239,14 @@ def decontaminate(scored):
     # regex-clean → md5-dedup-window front half SIX times (6 parquet
     # scans, 0 ReusedExchange; AQE cannot reuse because each branch
     # projects/filters differently right above the shared subtree). A
-    # localCheckpoint(eager=False) at the reuse point makes it run
-    # once. Not lazily: under AQE the call runs the dedup window's
-    # shuffle stage (1 job at sf0.01), and only the final stage and the
-    # block write wait for the first action (the packer's quantile
-    # job). The materialized rows are the gated SURVIVORS (doc_id,
-    # clean, n_tokens, bucket): the same bytes the dedup exchange
-    # already moved once, stored for the query's own lifetime,
-    # reclaimed by ContextCleaner when the result frame drops. Measured
-    # at sf0.1: 7.9-8.6 → 2.3-3.3 s warm, executed scans 6 → 1.
-    docs = scored.withColumn("bucket", _split_bucket()).localCheckpoint(
-        eager=False
-    )
+    # lazy checkpoint at the reuse point makes it run once; the call
+    # runs the dedup window's shuffle stage (1 job at sf0.01), the
+    # first action (the packer's quantile job) the rest. The
+    # materialized rows are the gated SURVIVORS (doc_id, clean,
+    # n_tokens, bucket): the same bytes the dedup exchange already
+    # moved once, released by the caller's materialize.scope().
+    # Measured at sf0.1: 7.9-8.6 → 2.3-3.3 s warm, executed scans 6 → 1.
+    docs = checkpoint(scored.withColumn("bucket", _split_bucket()))
     dirty = contaminated_train_ids(docs, text_col="clean")
     # no static broadcast hint: dirty is contamination-rate-sized — AQE
     # broadcasts it when small, sort-merges when not, exactly like the
@@ -266,10 +263,10 @@ def pack(kept):
     # three times (the eager approxQuantile action, the offsets branch,
     # the output branch) — without a reuse point each evaluation
     # re-runs the decontamination shingle self-join. The checkpointed
-    # frame is NARROW ((doc_id, n_tokens) survivor rows). Under AQE the
-    # call itself runs the self-join's shuffle and broadcast stages
-    # (8 jobs at sf0.01).
-    kept = kept.localCheckpoint(eager=False)
+    # frame is NARROW ((doc_id, n_tokens) survivor rows). The call
+    # itself runs the self-join's shuffle and broadcast stages (8 jobs
+    # at sf0.01).
+    kept = checkpoint(kept)
     return token_budget_batches(
         kept, "doc_id", "n_tokens", max_tokens=4096
     ).withColumn("global_cum", F.col("global_cum").cast("long"))
@@ -278,22 +275,19 @@ def pack(kept):
 # The checkpoint (narrow survivors: doc_id, lang, 2-double vector,
 # bucket) is written by the eager scaler.fit on the train split, so the
 # caller's action on the stats leaf reads those rows instead of
-# re-running the clean → dedup-window → gate front half. It is only
-# partly lazy: under AQE, localCheckpoint(eager=False) runs the dedup
-# window's shuffle stage at the call.
+# re-running the clean → dedup-window → gate front half. The call
+# itself runs the dedup window's shuffle stage.
 def gated_features(deduped):
     from pyspark.ml.functions import array_to_vector
 
     n, dr, keep = pipeline_gate_exprs()
-    return (
-        deduped.filter(keep)
-        .select(
+    return checkpoint(
+        deduped.filter(keep).select(
             "doc_id",
             "lang",
             array_to_vector(F.array(n.cast("double"), dr)).alias("fv"),
             _split_bucket().alias("bucket"),
         )
-        .localCheckpoint(eager=False)
     )
 
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from mldag_spark.materialize import cache
 from mldag_spark.queries import register
 from mldag_spark.queries.tables import dsum, load
 
@@ -616,9 +617,8 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     med aggregate materializes the 2-column cache on its first pass
     and the deviation aggregate plus the final rollup read from it,
     so the executed plan carries exactly ONE parquet scan
-    (plan-pinned). The cache is LRU-evictable and cleared by the
-    harnesses' per-query hygiene."""
-    e = load(spark, sf_dir, "events").select("event_type", "value").persist()
+    (plan-pinned). The caller's ``materialize.scope()`` releases it."""
+    e = cache(load(spark, sf_dir, "events").select("event_type", "value"))
     med = e.groupBy("event_type").agg(F.median("value").alias("med"))
     dev = e.join(F.broadcast(med), "event_type")
     mad = dev.groupBy("event_type").agg(

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from mldag_spark.materialize import cache, checkpoint, release
 from mldag_spark.queries import register
 from mldag_spark.queries.tables import load
 
@@ -107,8 +108,9 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     outw = sym.groupBy("src").agg(F.sum("w").alias("wout"))
-    contrib_base = sym.join(outw, "src").persist()
-    nodes = sym.select(F.col("src").alias("id")).distinct().persist()
+    contrib_base = cache(sym.join(outw, "src"))
+    nodes = cache(sym.select(F.col("src").alias("id")).distinct())
+    cuts = []
     try:
         n = nodes.count()
 
@@ -124,16 +126,18 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             if i and i % 2 == 0:
-                pr = pr.localCheckpoint(eager=False)
+                pr = checkpoint(pr)
+                cuts.append(pr)
         result = (
             pr.select("id", F.round("pr", 6).alias("pagerank"))
             .orderBy(F.desc("pagerank"), "id")
             .limit(25)
         )
         # Materialize the 25-row answer while the static sides are still
-        # cached, so the persisted frames can be released before return
-        # instead of leaking into a long-lived session.
-        return result.localCheckpoint(eager=True)
+        # cached, so the persisted frames and the rank checkpoints can be
+        # released before return instead of leaking into a long-lived
+        # session.
+        return checkpoint(result, eager=True)
     finally:
-        contrib_base.unpersist()
-        nodes.unpersist()
+        for df in (contrib_base, nodes, *cuts):
+            release(df)

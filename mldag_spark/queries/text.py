@@ -27,6 +27,7 @@ from mldag_spark.functions import (
     shingles,
     tokenize,
 )
+from mldag_spark.materialize import checkpoint
 from mldag_spark.queries import register
 from mldag_spark.queries.tables import load
 
@@ -3004,12 +3005,10 @@ def text_boilerplate_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, n_tokens, ck) blocks — 24 B/row, the narrowest possible
     reuse frame thanks to the 8-byte ck fingerprint. The producer
     still executes inside the caller's action because no exchange sits
-    below the checkpoint (under AQE, ``localCheckpoint(eager=False)``
-    runs the shuffle and broadcast stages below it at the call);
-    ContextCleaner reclaims the blocks when the frame is dropped.
-    Measured at sf0.1: 0.794 → 0.688 s (interleaved A/B, identical
-    rows at sf0.001 and sf0.1). The r8-r14 two-scan shape was itself a
-    deliberate trade against a dense_rank window over
+    below the checkpoint; the caller's ``materialize.scope()`` releases
+    the blocks. Measured at sf0.1: 0.794 → 0.688 s (interleaved A/B,
+    identical rows at sf0.001 and sf0.1). The r8-r14 two-scan shape
+    was itself a deliberate trade against a dense_rank window over
     ``partitionBy(ck)`` — still
     rejected, unchanged rationale: boilerplate keys are BY DEFINITION
     the hottest keys in the corpus, a window puts a mega-frequent
@@ -3043,16 +3042,14 @@ def text_boilerplate_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"i -> array_join(slice(toks, i * {_BP_W} + 1, {_BP_W}), ' ')) "
         "ELSE CAST(array() AS ARRAY<STRING>) END"
     )
-    chunks = (
+    # no exchange below, so this executes inside the caller's timed
+    # action, once
+    chunks = checkpoint(
         pretok.selectExpr(
             "doc_id",
             "CAST(size(toks) AS LONG) AS n_tokens",
             f"explode({chunk_arr}) AS chunk",
-        )
-        .selectExpr("doc_id", "n_tokens", "xxhash64(chunk) AS ck")
-        # no exchange below, so this executes inside the caller's
-        # timed action, once
-        .localCheckpoint(eager=False)
+        ).selectExpr("doc_id", "n_tokens", "xxhash64(chunk) AS ck")
     )
     boiler = (
         chunks.groupBy("ck")
@@ -3140,24 +3137,20 @@ def text_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1-token doc slices to two empty arrays and yields no rows, same
     # as the replaced when(n >= 2, ...) guard
     m = "size(toks) - 1"
-    grams = (
+    # r15: grams feeds both the frequency branch and the probe join,
+    # so without a reuse point the scan + regex tokenize + explode
+    # executes twice. The lazy checkpoint materializes it once inside
+    # the caller's action (no exchange sits below it); the blocks are
+    # the same occurrence-scale rows the probe join shuffles anyway,
+    # so no new scale class of data is stored. Interleaved A/B at
+    # sf0.1: ckpt faster in 3/4 warm passes (min 0.99 → 0.96 s),
+    # identical rows at sf0.001 and sf0.1.
+    grams = checkpoint(
         pretok.selectExpr(
             "doc_id",
             f"explode(arrays_zip(slice(toks, 1, {m}), slice(toks, 2, {m})))"
             " AS _z",
-        )
-        .selectExpr("doc_id", "concat_ws(' ', _z.`0`, _z.`1`) AS bg")
-        # r15: grams feeds both the frequency branch and the probe
-        # join, so without a reuse point the scan + regex tokenize +
-        # explode executes twice. localCheckpoint(eager=False)
-        # materializes it once inside the caller's action (lazy here
-        # only because no exchange sits below it: under AQE the call
-        # runs any shuffle or broadcast stage below it); the blocks are
-        # the same occurrence-scale rows the probe join shuffles anyway,
-        # so no new scale class of data is stored. Interleaved A/B at sf0.1:
-        # ckpt faster in 3/4 warm passes (min 0.99 → 0.96 s), identical
-        # rows at sf0.001 and sf0.1.
-        .localCheckpoint(eager=False)
+        ).selectExpr("doc_id", "concat_ws(' ', _z.`0`, _z.`1`) AS bg")
     )
     # r8 (VERDICT r7 #4): score each DISTINCT bigram once — log2,
     # round and the decimal cast run |distinct bg| times, built from

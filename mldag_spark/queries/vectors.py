@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from mldag_spark.materialize import cache, scope
 from mldag_spark.operators.similarity import (
     brute_force_topk,
     brute_force_topk_arrow,
@@ -1009,7 +1010,6 @@ def _km_fit(
     cents = [
         list(r["v"]) for r in vec.orderBy("vec_id").limit(k).collect()
     ]
-    work = vec.persist()
     # ONE parsed struct expression for the 64 component sums + count
     # instead of 65 Column chains per iteration (r16 construction
     # campaign — the aggregate is an EAGER driver-side action inside
@@ -1022,7 +1022,8 @@ def _km_fit(
         for i in range(_DIM)
     )
     agg_expr = F.expr(f"struct(count(1) AS n, {sums})")
-    try:
+    with scope():
+        work = cache(vec)
         for _ in range(iters):
             stats = (
                 _km_assign(work, cents)
@@ -1038,8 +1039,6 @@ def _km_fit(
                 for r in stats
             }
             cents = [new.get(j, c) for j, c in enumerate(cents)]
-    finally:
-        work.unpersist()
     return cents
 
 

@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from mldag_spark import materialize
+
 
 def _events_schema(ts_type: DataType) -> StructType:
     return StructType(
@@ -252,8 +254,11 @@ def write_stream_upsert(
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        batch = batch.persist()
-        try:
+        # foreachBatch runs on a py4j callback thread, where no caller's
+        # scope is visible: the batch cache and the winners checkpoint
+        # are released here, once the write returns
+        with materialize.scope():
+            batch = materialize.cache(batch)
             affected = [r[0] for r in batch.select(partition_col).distinct().collect()]
             if not affected:
                 return
@@ -280,10 +285,10 @@ def write_stream_upsert(
                 .drop("_rk", "_pri")
             )
             # The merged frame reads the same parquet path it overwrites.
-            # localCheckpoint severs that read dependency before the write
-            # starts, so a task retry racing the overwrite commit cannot
-            # re-scan partially-deleted target files.
-            winners = winners.localCheckpoint(eager=True)
+            # The eager checkpoint severs that read dependency before the
+            # write starts, so a task retry racing the overwrite commit
+            # cannot re-scan partially-deleted target files.
+            winners = materialize.checkpoint(winners, eager=True)
             (
                 winners.write.mode("overwrite")
                 # per-write dynamic overwrite: only the partitions present
@@ -293,8 +298,6 @@ def write_stream_upsert(
                 .partitionBy(partition_col)
                 .parquet(path)
             )
-        finally:
-            batch.unpersist()
 
     return (
         df.writeStream.foreachBatch(_merge)
@@ -470,10 +473,6 @@ def incremental_dedup_stream(
     )
 
     spark = index_rows.sparkSession
-    index_bands = minhash_band_index(
-        index_rows, id_col, elem_col, num_hashes, bands
-    ).persist()
-    index_bands.count()
 
     _seed_idempotent_sink(
         spark, out_path, checkpoint,
@@ -518,7 +517,13 @@ def incremental_dedup_stream(
             .parquet(f"{out_path}/_mb_id={int(batch_id)}")
         )
 
-    try:
+    # the scope releases the cached band index even when the stream
+    # dies: a leaked corpus-sized cache outlives the failed query
+    with materialize.scope():
+        index_bands = materialize.cache(
+            minhash_band_index(index_rows, id_col, elem_col, num_hashes, bands)
+        )
+        index_bands.count()
         q = (
             batch_stream.writeStream.foreachBatch(_process)
             .option("checkpointLocation", checkpoint)
@@ -526,10 +531,6 @@ def incremental_dedup_stream(
             .start()
         )
         q.awaitTermination()
-    finally:
-        # release the cached band index even when the stream dies —
-        # a leaked corpus-sized cache outlives the failed query
-        index_bands.unpersist()
     return q
 
 
@@ -689,10 +690,10 @@ def pack_stream_batch(
             )
             carry_in = int(rows[0]["cum_total"]) if rows else 0
     # the packer runs three actions over the batch (quantile bounds,
-    # bucket totals, the shifted write); persist so a foreachBatch
+    # bucket totals, the shifted write); cache so a foreachBatch
     # frame doesn't re-read its micro-batch source per action
-    batch = batch.persist()
-    try:
+    with materialize.scope():
+        batch = materialize.cache(batch)
         packed = token_budget_batches(
             batch, id_col, count_col, max_tokens
         )
@@ -712,8 +713,6 @@ def pack_stream_batch(
         shifted.write.mode("overwrite").parquet(
             f"{out_path}/_mb_id={bid}"
         )
-    finally:
-        batch.unpersist()
     total = (
         spark.read.parquet(f"{out_path}/_mb_id={bid}")
         .agg(F.coalesce(F.sum(count_col), F.lit(0)).alias("t"))

@@ -1218,15 +1218,18 @@ def main() -> int:
     cores_now = 32
 
     import __spark_entry__ as entrymod
+    from mldag_spark.materialize import scope
 
     qs = entrymod.queries()
+
+    # the sibling sf0.001 tables, as in bench.py's warm-up
+    warm_dir = os.path.join(os.path.dirname(SF_SMALL), "sf0.001")
 
     def warmup(names):
         for name in names:
             try:
-                qs[name](spark, "/root/testdata/sf0.001").write.mode(
-                    "overwrite"
-                ).format("noop").save()
+                with scope():
+                    qs[name](spark, warm_dir).write.mode("overwrite").format("noop").save()
             except Exception:
                 pass
 
@@ -1255,14 +1258,13 @@ def main() -> int:
         _probe_gate()
         best = float("inf")
         for _ in range(a.repeats):
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-            best = min(best, time.time() - t0)
-        # cache hygiene (the r10 remeasure lesson: leftover caches from
-        # an earlier query OOMed a later localCheckpoint chain): queries
-        # that persist internally (MAD, k-means, pagerank) must not
-        # carry their blocks into the next query's measurement
-        spark.catalog.clearCache()
+            # each run's checkpoints and caches are released after its
+            # wall is taken (the r10 remeasure lesson: leftover blocks
+            # from an earlier query OOMed a later checkpoint chain)
+            with scope():
+                t0 = time.time()
+                qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+                best = min(best, time.time() - t0)
         return round(best, 3)
 
     warmup(queries_main)

@@ -67,6 +67,7 @@ def main() -> int:
         p for p in (REPO, os.environ.get("PYTHONPATH")) if p
     )
     import __spark_entry__ as entrymod
+    from mldag_spark.materialize import scope
     from mldag_spark.session import recommended_session_confs
     from pyspark.sql import SparkSession
 
@@ -100,7 +101,8 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, args.sf).toPandas()
+            with scope():
+                sdf = fn(spark, args.sf).toPandas()
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             n_fail += 1

@@ -51,15 +51,17 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
+    from mldag_spark.materialize import scope
 
     qs = entrymod.queries()
     walls = []
     marks = []
     for i in range(runs):
         spark.sparkContext.setJobDescription(f"{name} run {i}")
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        walls.append(round(time.time() - t0, 3))
+        with scope():
+            t0 = time.time()
+            qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+            walls.append(round(time.time() - t0, 3))
         marks.append(time.time())
 
     app_id = spark.sparkContext.applicationId

@@ -39,3 +39,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def persistent_rdds(spark):
+    """Callable returning the ids of the session's persistent RDDs
+    (cached frames and local checkpoints alike). Compare id sets, not
+    counts: the async ContextCleaner may drop an earlier test's RDD
+    mid-test, which a count would read as a release."""
+    jsc = spark.sparkContext._jsc
+
+    def ids() -> set:
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+    return ids

@@ -4,12 +4,16 @@ The driver's correctness gate checks only the FIRST 50 entries of
 ``__spark_entry__.queries()`` (dict insertion order). These tests pin
 that the window is representative: every operator category and
 LLM-pipeline component has at least one entry inside it, and no
-rows-only (oracle-less) query burns a gated slot.
+rows-only (oracle-less) query burns a gated slot. Each gated query,
+run inside ``materialize.scope()``, leaves nothing persisted.
 """
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entrymod
+from mldag_spark.materialize import scope
 
 GATE_N = 50
 
@@ -69,6 +73,17 @@ def test_gate_window_covers_all_categories():
     assert any_with([
         "events_anomaly_mad", "events_ewma_value", "events_gapfill_hourly",
     ])
+
+
+@pytest.mark.parametrize("name", _window())
+def test_gated_query_leaves_nothing_persisted(
+    name, spark, sf_dir, persistent_rdds
+):
+    before = persistent_rdds()
+    with scope():
+        df = entrymod.queries()[name](spark, sf_dir)
+        df.write.mode("overwrite").format("noop").save()
+    assert persistent_rdds() <= before, f"{name} left persisted RDDs"
 
 
 def test_all_registered_queries_still_reachable():

@@ -681,24 +681,30 @@ def test_temperature_mix_prunes_scan(spark):
         assert "doc_id" not in schema, plan
 
 
-def test_connected_components_releases_checkpoint_blocks(spark):
+def test_connected_components_releases_checkpoint_blocks(
+    spark, monkeypatch, persistent_rdds
+):
     """Each round's localCheckpoint blocks must actually be freed when
     the next round materializes (ADVICE r5: unpersisting
     queryExecution().toRdd() was a silent no-op — it derives a fresh
     RDD over the checkpoint instead of the checkpointed RDD itself).
-    After the run, at most ONE extra persistent RDD may remain: the
-    final snapshot backing the returned DataFrame."""
-    from mldag_spark.operators.dedup import connected_components
+    During the run only the final snapshot backing the returned
+    DataFrame remains; the caller's scope releases it on exit."""
+    from mldag_spark.materialize import scope
+    from mldag_spark.operators import dedup
 
-    jsc = spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
+    # the star rounds, not the driver closure
+    monkeypatch.setattr(dedup, "_LOCAL_CLOSURE_EDGES", 0)
+    before = persistent_rdds()
     # a diameter-9 chain forces several Large-Star/Small-Star rounds,
     # i.e. several checkpoints that must be released along the way
     edges = [(i, i + 1) for i in range(10)]
     df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    out = connected_components(df, "doc_a", "doc_b")
-    assert out.count() == 11
-    assert jsc.getPersistentRDDs().size() <= before + 1
+    with scope():
+        out = dedup.connected_components(df, "doc_a", "doc_b")
+        assert out.count() == 11
+        assert len(persistent_rdds() - before) == 1
+    assert persistent_rdds() <= before
 
 
 def test_band_index_bucketed_probe_no_index_exchange(spark, tmp_path):
@@ -1729,20 +1735,25 @@ def test_bpe_encode_docs_matches_textbook_per_word_lengths(spark):
     assert got == want
 
 
-def test_bpe_checkpoint_batching_is_bit_identical(spark):
+def test_bpe_checkpoint_batching_is_bit_identical(spark, persistent_rdds):
     """Chain batching is an execution detail, not a semantics change:
     learning with a tiny checkpoint interval must produce the SAME
     merge table and the SAME encoded vocabulary, row for row, as the
-    unbatched chain (checkpoint_every=None)."""
+    unbatched chain (checkpoint_every=None). Each snapshot releases the
+    one it supersedes, so only the final one (backing the returned
+    vocabulary) stays persisted."""
     from mldag_spark.operators.tokenizer import bpe_learn
 
     wc = {"aaaaa": 3, "ab": 5, "cd": 5, "abab": 2, "abcd": 1, "bcbc": 2}
     docs = _bpe_docs(spark, wc)
+    before = persistent_rdds()
     # the chain under test is the DISTRIBUTED one (auto would route
     # this tiny vocab to the local trainer since r13)
     m_batched, enc_batched = bpe_learn(
         docs, n_merges=9, checkpoint_every=2, trainer="distributed"
     )
+    assert len(m_batched) >= 4  # at least two snapshots were written
+    assert len(persistent_rdds() - before) == 1
     m_plain, enc_plain = bpe_learn(
         docs, n_merges=9, checkpoint_every=None, trainer="distributed"
     )

@@ -37,6 +37,7 @@ TABLES = _check_oracle.TABLES
 
 sys.path.insert(0, str(REPO))
 import __spark_entry__ as entrymod  # noqa: E402
+from mldag_spark.materialize import scope  # noqa: E402
 
 _QUERIES = entrymod.queries()
 _ORACLES = entrymod.oracle_sql()
@@ -56,8 +57,11 @@ def duck():
 
 
 @pytest.mark.parametrize("name", UNGATED_WITH_ORACLE)
-def test_ungated_query_matches_oracle(name, spark, duck):
-    sdf = _QUERIES[name](spark, SF_DIR).toPandas()
+def test_ungated_query_matches_oracle(name, spark, duck, persistent_rdds):
+    before = persistent_rdds()
+    with scope():
+        sdf = _QUERIES[name](spark, SF_DIR).toPandas()
+    assert persistent_rdds() <= before, f"{name} left persisted RDDs"
     odf = duck.execute(_ORACLES[name]).df()
     assert sorted(sdf.columns) == sorted(odf.columns)
     assert len(sdf) == len(odf)

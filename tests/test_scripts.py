@@ -2,8 +2,9 @@
 one, which runs scripts/dump_plans.py in a subprocess.
 
 A script that builds its own session without the engine's confs gates
-or measures plans no caller gets; a cited ``scripts/<name>.py`` that
-was deleted sends the reader nowhere.
+or measures plans no caller gets; one that runs queries outside a
+``materialize.scope()`` carries their blocks into the next query; a
+cited ``scripts/<name>.py`` that was deleted sends the reader nowhere.
 """
 
 from __future__ import annotations
@@ -21,6 +22,18 @@ def test_every_session_builder_applies_recommended_confs():
     assert REPO / "scripts" / "check_oracle.py" in builders
     missing = [str(p.relative_to(REPO)) for p in builders
                if "recommended_session_confs()" not in p.read_text()]
+    assert not missing, missing
+
+
+def test_every_query_running_script_opens_a_scope():
+    # the caller that runs a query's last action owns the scope that
+    # releases its checkpoints and caches (mldag_spark/materialize.py)
+    files = [*(REPO / "scripts").glob("*.py"), REPO / "bench.py"]
+    runners = [p for p in files if "queries()" in p.read_text()
+               and re.search(r"\.save\(\)|\.toPandas\(\)", p.read_text())]
+    assert {"bench.py", "time_queries.py", "check_oracle.py",
+            "bench_scaling.py"} <= {p.name for p in runners}
+    missing = [p.name for p in runners if "scope()" not in p.read_text()]
     assert not missing, missing
 
 

@@ -107,10 +107,13 @@ def test_file_sink_roundtrip(tmp_path, spark, sf_dir):
     assert back.count() > 0
 
 
-def test_upsert_sink_last_writer_wins_and_idempotent(spark, sf_dir, tmp_path):
+def test_upsert_sink_last_writer_wins_and_idempotent(
+    spark, sf_dir, tmp_path, persistent_rdds
+):
     # drain the events stream into a keyed upsert target: latest event
     # per (user_id, event_type), partitioned by event_type
     target = str(tmp_path / "target")
+    before = persistent_rdds()
 
     def drain(ckpt: str):
         q = S.write_stream_upsert(
@@ -126,6 +129,8 @@ def test_upsert_sink_last_writer_wins_and_idempotent(spark, sf_dir, tmp_path):
         q.awaitTermination()
 
     drain("ckpt1")
+    # each micro-batch releases its batch cache and winners checkpoint
+    assert persistent_rdds() <= before
     got = spark.read.parquet(target)
 
     batch = load(spark, sf_dir, "events").select(
