@@ -367,6 +367,13 @@ class MLDagNode(NodeBase):
 
     ``fit`` delegates to the inner dag's fit; ``transform`` returns the
     inner dag's outputs as a tuple in declared order.
+
+    The inner dag runs as its own ``MLDag`` call, with its own
+    ``mixins``: the outer dag's mixins see this node, never the inner
+    nodes. Under the outer one-pass ``fit_transform`` this node's
+    ``fit`` runs the inner fit pass and its ``transform`` a second,
+    transform-only inner pass, so every inner non-leaf node transforms
+    twice.
     """
 
     def __init__(self, mldag=None, name: Optional[str] = None):

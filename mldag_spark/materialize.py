@@ -3,7 +3,8 @@
 Every frame the engine materializes goes through :func:`checkpoint`
 (``localCheckpoint``) or :func:`cache` (``persist``); :func:`release`
 frees a frame's blocks now, and :func:`scope` releases everything the
-two made while it was open.
+two made while it was open. :func:`collect_bounded` is the one
+small-input decision: finish on the driver when a frame fits a cap.
 
 Lifetime rule: the caller that runs the last action owns the scope.
 Library code, ``MLDag`` runs included, never closes a scope around the
@@ -24,10 +25,13 @@ from __future__ import annotations
 
 import contextlib
 import contextvars
-from typing import Iterator, Optional
+from typing import TYPE_CHECKING, Iterator, Optional
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # the open scope's frames, each with whether it was cached (a
 # released cache reads is_cached False, like a checkpoint)
@@ -104,3 +108,18 @@ def scope() -> Iterator[None]:
         _owned.reset(token)
         for df, cached in reversed(owned):
             _free(df, cached)
+
+
+def collect_bounded(df: DataFrame, cap: int) -> "Optional[pa.Table]":
+    """The rows of ``df`` as an Arrow table when there are at most
+    ``cap`` of them, else ``None``: the bounded-collect law, which
+    finishes small inputs on the driver and never pulls more than
+    ``cap + 1`` rows to find out.
+
+    One Spark action: ``limit(cap + 1)`` collected through Arrow runs
+    as a single job (a row ``collect`` of a limit scans partitions in
+    growing batches, one job each). A lazy :func:`checkpoint` below
+    ``df`` is written whole by that job, so a caller that gets ``None``
+    reads the same blocks on its distributed path."""
+    table = df.limit(cap + 1).toArrow()
+    return table if table.num_rows <= cap else None

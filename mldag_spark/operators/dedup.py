@@ -21,9 +21,14 @@ small hash-equality join — the plan that survives 100 TB.
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, functions as F
 
-from mldag_spark.materialize import checkpoint, release
+from mldag_spark.materialize import checkpoint, collect_bounded, release
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 def minhash_signatures(
@@ -763,36 +768,40 @@ def containment_pairs(
 
 
 # Closure graphs with at most this many distinct edges are finished on
-# the driver: one collect of the first checkpoint, union-find in Python,
-# labels back as a LocalRelation. The cap bounds driver memory, not
-# speed (the bounded-collect law — operators/similarity.py
-# `_collect_bounded`), and is checked against the edge count the first
-# signature already measures. On local[4] the driver finish beat the
-# star rounds at every size tried (10k edges 0.44 vs 6.2 s, 100k
-# 1.3 vs 14.4 s, 1M 7.2 vs 92 s), while its Python RSS grew ~20 MB at
-# 100k edges and ~170 MB at 1M; past the cap the star rounds spread
-# the work over the cluster instead. Gate-scale graphs (18-175 verified
-# edges at sf0.001-sf0.1; 19k pairs / 48k nodes at sf10) all fit.
+# the driver: one bounded collect of the edge checkpoint, union-find in
+# Python, labels back as a LocalRelation. The cap bounds driver memory,
+# not speed (the bounded-collect law, ``materialize.collect_bounded``,
+# which measures and fetches the edges in one action). On local[4] the
+# driver finish beat the star rounds at every size tried (10k edges
+# 0.44 vs 6.2 s, 100k 1.3 vs 14.4 s, 1M 7.2 vs 92 s), while its Python
+# RSS grew ~20 MB at 100k edges and ~170 MB at 1M; past the cap the
+# star rounds spread the work over the cluster instead. Gate-scale
+# graphs (18-175 verified edges at sf0.001-sf0.1; 19k pairs / 48k
+# nodes at sf10) all fit.
 _LOCAL_CLOSURE_EDGES = 1 << 17
+# Large-Star/Small-Star rounds run until the edge set's signature
+# reaches a fixed point, or at most this many times.
+_MAX_STAR_ROUNDS = 25
 
 
 def connected_components(
-    edges: DataFrame, src: str = "doc_a", dst: str = "doc_b",
-    max_iter: int = 25,
+    edges: DataFrame, src: str = "doc_a", dst: str = "doc_b"
 ) -> DataFrame:
     """(node, component) labels for the undirected graph given as an
     edge list — the clustering step that turns near-dup PAIRS into
     duplicate GROUPS (component id = min node id in the group).
 
     Routing: the normalized edge set (self-loops dropped, each edge
-    once as u < v) is checkpointed eagerly and its signature counts it.
-    Integral ids with at most ``_LOCAL_CLOSURE_EDGES`` edges take the
-    DRIVER path: the checkpoint is collected once, closed by union-find
-    (smaller id always the root, so component = min node id), released,
-    and the labels come back as a ``LocalRelation`` built from a
-    ``pyarrow.Table`` — no star round, no Python worker, nothing left
-    persisted. Larger graphs (or non-integral ids) take the STAR path
-    below. Both paths return the same rows, column names and types
+    once as u < v) is checkpointed lazily. For integral ids, one
+    bounded collect (``materialize.collect_bounded``) writes the
+    checkpoint and fetches it when it holds at most
+    ``_LOCAL_CLOSURE_EDGES`` edges. Those graphs take the DRIVER path:
+    union-find (smaller id always the root, so component = min node
+    id), the checkpoint released, and the labels back as a
+    ``LocalRelation`` built from the ``pyarrow.Table`` — no star
+    round, no Python worker, nothing left persisted. Larger graphs (or
+    non-integral ids) take the STAR path below, from the same
+    checkpoint. Both paths return the same rows, column names and types
     (pinned by tests/test_dedup_closure.py).
 
     Star path — alternating Large-Star / Small-Star (Kiveris et al.,
@@ -807,7 +816,7 @@ def connected_components(
     lineage (on a real cluster point ``spark.sparkContext.setCheckpointDir``
     at durable storage and swap in ``checkpoint``); convergence is
     detected by the edge set's (count, hash-sum) signature reaching a
-    fixed point.
+    fixed point (at most ``_MAX_STAR_ROUNDS`` rounds).
 
     Memory hygiene (hardened in r5 after an sf1.0 OOM in a 2g
     harness): checkpoint blocks go to DISK_ONLY — an iterative
@@ -819,11 +828,11 @@ def connected_components(
     snapshot backs the returned DataFrame; the caller's
     ``materialize.scope()`` releases it.
     """
-    return _components(edges, src, dst, max_iter)[0]
+    return _components(edges, src, dst)[0]
 
 
 def _components(
-    edges: DataFrame, src: str, dst: str, max_iter: int = 25
+    edges: DataFrame, src: str, dst: str
 ) -> "tuple[DataFrame, int | None]":
     """:func:`connected_components` plus its node count when the
     driver path has it for free (``None`` on the star path, where
@@ -842,9 +851,15 @@ def _components(
         .filter("u != v")
         .selectExpr("least(u, v) AS u", "greatest(u, v) AS v")
         .distinct(),
-        eager=True,
         storage_level=StorageLevel.DISK_ONLY,
     )
+    # integral ids only: Python orders them exactly as Spark does
+    # (floating ids would not, e.g. NaN)
+    if isinstance(e.schema["u"].dataType, IntegralType):
+        table = collect_bounded(e, _LOCAL_CLOSURE_EDGES)
+        if table is not None:
+            release(e)
+            return _local_components(e.sparkSession, table)
 
     _sig_expr = F.expr(
         # bit_xor, not sum: order-independent and cannot overflow
@@ -885,16 +900,7 @@ def _components(
         )
 
     sig = signature(e)
-    # integral ids only: Python orders them exactly as Spark does
-    # (floating ids would not, e.g. NaN)
-    if sig[0] <= _LOCAL_CLOSURE_EDGES and isinstance(
-        e.schema["u"].dataType, IntegralType
-    ):
-        labels, n_nodes = _local_components(e)
-        release(e)
-        return labels, n_nodes
-
-    for _ in range(max_iter):
+    for _ in range(_MAX_STAR_ROUNDS):
         prev = e
         e = checkpoint(
             small_star(large_star(e)),
@@ -916,14 +922,13 @@ def _components(
     ), None
 
 
-def _local_components(e: DataFrame) -> "tuple[DataFrame, int]":
-    """Driver finish of :func:`connected_components` over the
-    materialized (u < v) edge set ``e``: ``(labels, n_nodes)``.
-    Union-find with path compression; the smaller root always wins, so
-    every root is its component's min id, as on the star path."""
+def _local_components(spark, t: "pa.Table") -> "tuple[DataFrame, int]":
+    """Driver finish of :func:`connected_components` over the collected
+    (u < v) edge set ``t``: ``(labels, n_nodes)``. Union-find with
+    path compression; the smaller root always wins, so every root is
+    its component's min id, as on the star path."""
     import pyarrow as pa
 
-    t = e.toArrow()
     parent: dict = {}
 
     def find(x):
@@ -946,10 +951,10 @@ def _local_components(e: DataFrame) -> "tuple[DataFrame, int]":
         "node": pa.array(nodes, id_type),
         "component": pa.array([find(x) for x in nodes], id_type),
     })
-    return e.sparkSession.createDataFrame(table), len(nodes)
+    return spark.createDataFrame(table), len(nodes)
 
 
-# the default broadcast cap for keep-best member/loser joins (MEMBER
+# the broadcast cap for keep-best member/loser joins (MEMBER
 # ROWS; ~64 B per (long, double) hash-relation entry => ~256 MiB
 # resident at 4M — size per deployment). Shared by the selection's
 # member join AND keep_best_survivors' loser anti-join so the two
@@ -964,11 +969,9 @@ def keep_best_losers(
     quality_col: str = "qs",
     src: str = "doc_a",
     dst: str = "doc_b",
-    broadcast_member_cap: int = BROADCAST_MEMBER_CAP,
 ) -> DataFrame:
     out, _n = keep_best_losers_counted(
-        pairs, quality, id_col, quality_col, src, dst,
-        broadcast_member_cap,
+        pairs, quality, id_col, quality_col, src, dst
     )
     return out
 
@@ -980,7 +983,6 @@ def keep_best_losers_counted(
     quality_col: str = "qs",
     src: str = "doc_a",
     dst: str = "doc_b",
-    broadcast_member_cap: int = BROADCAST_MEMBER_CAP,
 ) -> "tuple[DataFrame, int]":
     """Pair-source-AGNOSTIC quality-aware representative selection
     (r14, VERDICT r13 #2): near-dup PAIRS in (from ANY miner — the
@@ -1000,7 +1002,7 @@ def keep_best_losers_counted(
     the star path) and the labels⋈quality join strategy is picked
     from the measured size, never guessed:
 
-    * ``n_members <= broadcast_member_cap`` — quality is first pruned
+    * ``n_members <= BROADCAST_MEMBER_CAP`` — quality is first pruned
       to member rows with a broadcast LEFT SEMI against the member-id
       set (LeftSemi BuildRight — a broadcast hint on the PRESERVED
       side of a left outer join is silently DROPPED by Spark 4.1, so
@@ -1015,9 +1017,9 @@ def keep_best_losers_counted(
       a broadcast of an unbounded frame.
 
     The cap's unit is MEMBER ROWS: a (long, double) pair costs ~64 B
-    in a broadcast hash relation, so the 4M default is ≈256 MiB
+    in a broadcast hash relation, so the 4M cap is ≈256 MiB
     resident per executor — inside a standard 8 GiB executor's
-    broadcast budget; size it per deployment.
+    broadcast budget.
 
     Both branches are plan-pinned by tests/test_plans.py. The ranking
     window partitions by component over member rows only
@@ -1052,7 +1054,7 @@ def keep_best_losers_counted(
     # miner ran over a superset) must still be ranked, not silently
     # dropped from the window — an inner join here made the whole
     # cluster survive dedup with no error (code-review r14 #3).
-    if n_members <= broadcast_member_cap:
+    if n_members <= BROADCAST_MEMBER_CAP:
         member_q = q.join(
             F.broadcast(labels.select("node")), "node", "left_semi"
         )

@@ -113,7 +113,6 @@ def token_budget_batches(
     id_col: str,
     count_col: str,
     max_tokens: int,
-    num_partitions: int = 0,
 ) -> DataFrame:
     """(id, count, global_cum, batch_id) — contiguous token-budget
     sharding in id order.
@@ -127,9 +126,9 @@ def token_budget_batches(
 
     ``id_col`` must be numeric (bucket boundaries come from
     ``approxQuantile``); ids are compared as doubles, exact for
-    integral ids up to 2^53. ``num_partitions`` sets the bucket count
-    (default: ``spark.sql.shuffle.partitions``) — it bounds the
-    parallelism of the local-cumsum stage, nothing else.
+    integral ids up to 2^53. The bucket count is the session's
+    ``spark.sql.shuffle.partitions`` — it bounds the parallelism of
+    the local-cumsum stage, nothing else.
 
     Note: this function runs one eager ``approxQuantile`` action on
     the (id) column at call time to fix the bucket boundaries (see
@@ -137,7 +136,7 @@ def token_budget_batches(
     """
     if max_tokens <= 0:
         raise ValueError("max_tokens must be positive")
-    n_buckets = int(num_partitions) or int(
+    n_buckets = int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
     # cap at the documented design point: bounds/offsets are embedded

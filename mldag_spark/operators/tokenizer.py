@@ -42,12 +42,17 @@ ASCII from normalized words, so binary and default collations agree).
 
 from __future__ import annotations
 
-from typing import NamedTuple, Optional
+from typing import TYPE_CHECKING, NamedTuple, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
 from mldag_spark.functions import tokenize
-from mldag_spark.materialize import cache, checkpoint, release
+from mldag_spark.materialize import (
+    cache, checkpoint, collect_bounded, release,
+)
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # Start-of-symbol / end-of-symbol markers. normalize_text only
 # collapses WHITESPACE (ADVICE r13 #1 — the old comment overstated),
@@ -153,12 +158,14 @@ def merge_pattern(left: str, right: str) -> tuple[str, str]:
 CHECKPOINT_EVERY = 64
 
 
-# The local trainer collects the symbolized vocabulary ONCE; the cap
-# makes an uncapped-vocab misuse an ERROR (the bounded-collect law —
-# operators/similarity.py `_collect_bounded`), not a driver OOM.
-# Production tokenizer vocabs are ~10^5 words (top_words-capped by the
-# same sample-bounded-training contract the quantizers follow), far
-# under this.
+# Vocabularies of at most this many words train on the driver: one
+# collect of the cached vocabulary, then the in-memory merge loop. The
+# cap bounds driver memory (the bounded-collect law,
+# ``materialize.collect_bounded``); a larger vocabulary takes the
+# distributed merge loop instead of a driver OOM. Production tokenizer
+# vocabs are ~10^5 words (top_words-capped by the same
+# sample-bounded-training contract the quantizers follow), far under
+# this.
 _LOCAL_VOCAB_CAP = 1 << 20
 
 
@@ -246,37 +253,20 @@ def _local_merge_loop(
 
 
 def _bpe_learn_local(
-    docs: DataFrame,
-    text_col: str,
-    n_merges: int,
-    top_words: Optional[int],
-    vocab: Optional[DataFrame] = None,
+    spark, vocab: "pa.Table", n_merges: int
 ) -> tuple[list[Merge], DataFrame]:
-    """Local trainer: ONE distributed corpus aggregate to the capped
-    (w, cnt) vocabulary, one bounded collect, then the in-memory merge
-    loop; the encoded vocabulary returns as a local DataFrame in the
-    same (s, cnt) delimited shape the distributed path produces.
-    ``vocab`` accepts a prebuilt (persisted) word_vocab frame so the
-    auto route's measurement and the collect share one corpus
-    aggregate (ADVICE r13 #2)."""
-    from mldag_spark.operators.similarity import _collect_bounded
-
-    rows = _collect_bounded(
-        word_vocab(docs, text_col, top_words) if vocab is None else vocab,
-        top_words if top_words is not None else _LOCAL_VOCAB_CAP,
-        "BPE training vocabulary",
-    )
-    words = [list(r["w"]) for r in rows]
-    counts = [int(r["cnt"]) for r in rows]
+    """Local trainer over the collected (w, cnt) vocabulary: the
+    in-memory merge loop, with the encoded vocabulary returned as a
+    local DataFrame in the same (s, cnt) delimited shape the
+    distributed loop produces."""
+    words = [list(w) for w in vocab.column("w").to_pylist()]
+    counts = [int(c) for c in vocab.column("cnt").to_pylist()]
     merges = _local_merge_loop(words, counts, n_merges)
     enc_rows = [
         ("".join(SOH + s + EOT for s in syms), cnt)
         for syms, cnt in zip(words, counts)
     ]
-    enc = docs.sparkSession.createDataFrame(
-        enc_rows, "s string, cnt long"
-    )
-    return merges, enc
+    return merges, spark.createDataFrame(enc_rows, "s string, cnt long")
 
 
 def bpe_learn(
@@ -284,88 +274,49 @@ def bpe_learn(
     text_col: str = "text",
     n_merges: int = 6,
     top_words: Optional[int] = None,
-    checkpoint_every: Optional[int] = CHECKPOINT_EVERY,
-    trainer: str = "auto",
 ) -> tuple[list[Merge], DataFrame]:
     """Learn ``n_merges`` BPE merges over the corpus; returns the
     ordered merge table and the final encoded vocabulary (s, cnt)
     with every merge applied.
 
-    ``trainer`` (r13, VERDICT r12 #1):
+    The (w, cnt) vocabulary is built once (the corpus-sized aggregate,
+    distributed) and cached; one bounded collect of it
+    (``materialize.collect_bounded``) both measures it and, when it
+    has at most ``_LOCAL_VOCAB_CAP`` words, fetches it. The path
+    follows the measured size (r13, VERDICT r12 #1):
 
-    - ``"distributed"`` — the vocabulary is persisted ONCE; each
-      learned merge appends one literal JVM ``replace`` to the
-      expression chain, and every ``checkpoint_every`` merges the
-      encoded vocabulary is snapshotted by an eager checkpoint (a
-      lineage cut; each snapshot releases the one it supersedes, so
-      the working set is one vocab-sized snapshot) and the chain
-      restarts at depth 0.
+    - fits: the merge loop runs driver-side with incremental pair
+      statistics (:func:`_local_merge_loop`): ~10k merges run in
+      SECONDS (SCALING.json ``bpe_local_trainer``). A
+      ``top_words``-capped vocabulary (the sample-bounded-training
+      contract the PQ/IVF quantizers follow) fits whenever
+      ``top_words`` is at most the cap.
+    - too large: the distributed loop. Each learned merge is a
+      vocab-sized pair-count job, a 1-row argmax collect and one
+      literal JVM ``replace`` appended to the expression chain; every
+      ``CHECKPOINT_EVERY`` merges the encoded vocabulary is
+      snapshotted by an eager checkpoint (a lineage cut; each snapshot
+      releases the one it supersedes, so the working set is one
+      vocab-sized snapshot) and the chain restarts at depth 0.
       Per-merge cost is vocab-bounded AND merge-count-invariant
       (measured flat to 1,024 merges — SCALING.json
-      ``bpe_merge_axis``) — but the invariant is ~0.9 s of Spark JOB
-      LATENCY per merge, so 32k merges cost ~8 h of pure scheduler
-      overhead. The right path only when the vocabulary is UNCAPPED
-      (too large to collect).
-    - ``"local"`` — a ``top_words``-capped vocabulary is
-      closure-sized by the same sample-bounded-training contract the
-      PQ/IVF quantizers follow, so it is collected ONCE (bounded —
-      ``_LOCAL_VOCAB_CAP``) and the merge loop runs driver-side with
-      incremental pair statistics (:func:`_local_merge_loop`):
-      ~10k merges run in SECONDS instead of hours (SCALING.json
-      ``bpe_local_trainer``). Merges AND the returned encoded
-      vocabulary are bit-identical to the distributed path (pinned
-      by test at n_merges >= 64); the corpus-sized vocabulary
-      aggregate still runs distributed.
-    - ``"auto"`` (default) — ``"local"`` when ``top_words`` is set
-      (capped == closure-sized BY CONTRACT, no measurement needed);
-      otherwise the vocabulary is MEASURED first (one cheap COUNT
-      aggregate — the corpus pass runs for training either way) and
-      the local path is taken iff it fits ``_LOCAL_VOCAB_CAP``. Only
-      a vocabulary that is actually unbounded pays the distributed
-      loop's per-merge job latency; results are bit-identical on
-      either path (pinned), so routing never changes answers.
+      ``bpe_merge_axis``), but it is ~0.9 s of Spark JOB LATENCY per
+      merge, so 32k merges cost ~8 h of scheduler overhead.
 
-    In the distributed path the only per-iteration driver traffic is
-    the 1-row argmax collect. ``checkpoint_every=None`` disables
-    chain batching (test/debug only; results are bit-identical either
-    way, pinned by test)."""
+    Merges AND the returned encoded vocabulary are bit-identical on
+    either path (pinned by test at n_merges >= 64, across a lineage
+    cut), so routing never changes answers."""
     if n_merges < 0:
         raise ValueError("n_merges must be >= 0")
-    if checkpoint_every is not None and checkpoint_every < 1:
-        raise ValueError("checkpoint_every must be >= 1 or None")
-    if trainer not in ("auto", "local", "distributed"):
-        raise ValueError(f"unknown trainer {trainer!r}")
-    vocab: Optional[DataFrame] = None
     # everything after cache(vocab) runs under ONE try/finally that
-    # releases it: the old form relied on the merge loop's finally, so
-    # a raise from the trainer count, _bpe_learn_local's setup, or
-    # symbolize()/cache() leaked the cached vocab frame across the
-    # ~150-query registry (ADVICE r14 #4)
+    # releases it, so a raise anywhere below cannot leak the cached
+    # vocabulary across the ~150-query registry (ADVICE r14 #4)
+    vocab = cache(word_vocab(docs, text_col, top_words))
     try:
-        if trainer == "auto":
-            if top_words is not None:
-                trainer = "local"
-            else:
-                # a COUNT respects the bounded-collect law (it pulls
-                # one number, not rows); limit(cap+1) bounds even the
-                # count's work for genuinely huge vocabularies. The
-                # vocabulary is built ONCE and persisted so the
-                # measurement and the chosen trainer share a single
-                # corpus aggregate — whichever route wins reads the
-                # cached frame instead of re-running the corpus
-                # explode (ADVICE r13 #2)
-                vocab = cache(word_vocab(docs, text_col))
-                measured = vocab.limit(_LOCAL_VOCAB_CAP + 1).count()
-                trainer = (
-                    "local" if measured <= _LOCAL_VOCAB_CAP
-                    else "distributed"
-                )
-        if trainer == "local":
-            return _bpe_learn_local(
-                docs, text_col, n_merges, top_words, vocab=vocab
-            )
-        src = word_vocab(docs, text_col, top_words) if vocab is None else vocab
-        base = cache(symbolize(src))
+        table = collect_bounded(vocab, _LOCAL_VOCAB_CAP)
+        if table is not None:
+            return _bpe_learn_local(docs.sparkSession, table, n_merges)
+        base = cache(symbolize(vocab))
         merges: list[Merge] = []
         enc = base
         snap: Optional[DataFrame] = None
@@ -387,10 +338,7 @@ def bpe_learn(
                     "s", F.replace(F.col("s"), F.lit(pat), F.lit(rep))
                 )
                 chain_depth += 1
-                if (
-                    checkpoint_every is not None
-                    and chain_depth >= checkpoint_every
-                ):
+                if chain_depth >= CHECKPOINT_EVERY:
                     enc = checkpoint(enc, eager=True)
                     if snap is not None:
                         release(snap)
@@ -403,8 +351,7 @@ def bpe_learn(
             release(base)
         return merges, enc
     finally:
-        if vocab is not None:
-            release(vocab)
+        release(vocab)
 
 
 def token_counts(enc: DataFrame, top_n: Optional[int] = None) -> DataFrame:
@@ -426,16 +373,12 @@ def token_counts(enc: DataFrame, top_n: Optional[int] = None) -> DataFrame:
     return out
 
 
-def bpe_apply(
-    enc: DataFrame,
-    merges,
-    checkpoint_every: Optional[int] = CHECKPOINT_EVERY,
-) -> DataFrame:
+def bpe_apply(enc: DataFrame, merges) -> DataFrame:
     """Apply an ORDERED merge table to a symbolized vocabulary — the
     production path: merges are learned once (or loaded from the
     published parquet artifact, <= n_merges rows by construction,
     collected once) and applied as the same codegen literal-replace
-    chain ``bpe_learn`` builds — with the same ``checkpoint_every``
+    chain ``bpe_learn`` builds — with the same ``CHECKPOINT_EVERY``
     chain batching, so plan depth stays bounded at production merge
     counts — making artifact-driven encoding bit-identical to
     learn-time encoding. Accepts the ``text_bpe_merges`` DataFrame
@@ -454,7 +397,7 @@ def bpe_apply(
             "s", F.replace(F.col("s"), F.lit(pat), F.lit(rep))
         )
         chain_depth += 1
-        if checkpoint_every is not None and chain_depth >= checkpoint_every:
+        if chain_depth >= CHECKPOINT_EVERY:
             enc = checkpoint(enc, eager=True)
             if snap is not None:
                 release(snap)

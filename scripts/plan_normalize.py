@@ -9,8 +9,14 @@ ids (#123), plan ids, lambda variable names, checkpoint RDD ids,
 subquery/CTE numbering, the random suffix of streaming work dirs.
 This script is that normalizer, committed so the gate is
 reproducible. Not masked: the column order of a distinct-aggregate
-``Expand``, which follows expression-id hashes and so can differ
-between a full-registry dump and a dump of one query.
+``Expand``, which follows expression-id hashes and so drifts with the
+JVM's history: a full-registry dump can differ from a dump of one
+query, or from another full dump of the same code. Four queries have
+such an ``Expand``: ``agg_exact_distinct_counts``,
+``agg_approx_distinct_counts``, ``dq_column_profile`` and
+``q21_sole_late_supplier``. Re-dump those four on both sides with
+``scripts/dump_plans.py DIR --only <names>`` before reading a
+full-registry diff.
 
 Usage:
   python scripts/plan_normalize.py a.txt b.txt      # diff → exit 0/1

@@ -6,6 +6,8 @@ behavior is exercised by bench.py / check_oracle.py at larger SFs.
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -53,3 +55,25 @@ def persistent_rdds(spark):
         return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
 
     return ids
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs(group) as ids:`` collects the ids of the Spark
+    jobs started inside the block. Job groups accumulate, so use a
+    fresh group name per measurement."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def jobs(group: str):
+        sc.setJobGroup(group, group)
+        ids: list[int] = []
+        try:
+            yield ids
+        finally:
+            sc._jsc.clearJobGroup()
+            # the status tracker is fed by the asynchronous listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return jobs

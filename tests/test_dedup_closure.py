@@ -9,8 +9,6 @@ shuffle and broadcast stage below it.
 
 from __future__ import annotations
 
-import contextlib
-
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
@@ -23,21 +21,6 @@ from mldag_spark.operators.dedup import connected_components
 def star_path(monkeypatch):
     """Route every closure through the Large-Star/Small-Star rounds."""
     monkeypatch.setattr(dedup, "_LOCAL_CLOSURE_EDGES", 0)
-
-
-@contextlib.contextmanager
-def _jobs(spark, group: str):
-    """Collect the ids of the Spark jobs started inside the block."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    ids: list[int] = []
-    try:
-        yield ids
-    finally:
-        sc._jsc.clearJobGroup()
-        # the status tracker is fed by the asynchronous listener bus
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _both_paths(monkeypatch, edges):
@@ -113,6 +96,21 @@ def test_driver_path_leaves_no_persistent_rdd(spark):
     assert jsc.getPersistentRDDs().size() == before
 
 
+def test_driver_path_fires_one_action_over_the_checkpoint(spark, spark_jobs):
+    """A driver-sized graph is measured and fetched by one bounded
+    collect of its lazy edge checkpoint: two jobs in all, the first
+    the ``distinct`` shuffle stage that the lazy checkpoint call runs
+    (test_lazy_local_checkpoint_runs_its_exchanges_at_the_call), the
+    second the collect that writes and reads the checkpoint. An eager
+    checkpoint, a signature aggregate and a separate collect took
+    five."""
+    df = spark.createDataFrame(_chain(10, start=0), ["doc_a", "doc_b"])
+    with spark_jobs("closure.driver_path") as ids:
+        out = connected_components(df, "doc_a", "doc_b")
+    assert len(ids) == 2, ids
+    assert out.count() == 11
+
+
 def test_star_path_releases_checkpoint_blocks(spark, star_path):
     """Forced-star twin of
     test_operators.py::test_connected_components_releases_checkpoint_blocks:
@@ -130,26 +128,26 @@ def test_star_path_releases_checkpoint_blocks(spark, star_path):
 class _GroupNode(m.MLDagMixin):
     """Runs one named node's transform inside its own job group."""
 
-    def __init__(self, spark, node: str) -> None:
-        self.spark, self.node, self.ids = spark, node, []
+    def __init__(self, jobs, node: str) -> None:
+        self.jobs, self.node, self.ids = jobs, node, []
 
     def _transform(self, call_next, node, *a, **kw):
         if node.name != self.node:
             return call_next(*a, **kw)
-        with _jobs(self.spark, f"node.{node.name}") as ids:
+        with self.jobs(f"node.{node.name}") as ids:
             out = call_next(*a, **kw)
         self.ids = ids
         return out
 
 
-def test_fuzzy_dedup_keep_best_job_budget(spark, sf_dir):
+def test_fuzzy_dedup_keep_best_job_budget(spark, spark_jobs, sf_dir):
     """The closure finishes on the driver at this scale, so keep_best
-    fires its checkpoint, signature and one collect instead of ~10 star
-    rounds (35 jobs when every round ran on Spark)."""
+    fires its checkpoint's exchange and one bounded collect instead of
+    ~10 star rounds (35 jobs when every round ran on Spark)."""
     from mldag_spark.queries.dag_pipeline import build_fuzzy_dedup_dag
 
     dag = build_fuzzy_dedup_dag(spark)
-    probe = _GroupNode(spark, "keep_best")
+    probe = _GroupNode(spark_jobs, "keep_best")
     dag.mixins.append(probe)
     out = dag.transform(sf_dir).outputs["survivors"]
     assert probe.ids, "keep_best ran no Spark job"
@@ -157,7 +155,9 @@ def test_fuzzy_dedup_keep_best_job_budget(spark, sf_dir):
     assert out.count() > 0
 
 
-def test_lazy_local_checkpoint_runs_its_exchanges_at_the_call(spark):
+def test_lazy_local_checkpoint_runs_its_exchanges_at_the_call(
+    spark, spark_jobs
+):
     """``localCheckpoint(eager=False)`` is lazy only above its last
     exchange: with AQE on (``recommended_session_confs()``), the call
     executes the plan's shuffle and broadcast stages, and only the
@@ -171,9 +171,9 @@ def test_lazy_local_checkpoint_runs_its_exchanges_at_the_call(spark):
         facts.groupBy("k").agg(F.sum("v").alias("s"))
         .join(F.broadcast(dim), "k")
     )
-    with _jobs(spark, "lazy_ckpt.call") as at_call:
+    with spark_jobs("lazy_ckpt.call") as at_call:
         ckpt = frame.localCheckpoint(eager=False)
-    with _jobs(spark, "lazy_ckpt.action") as at_action:
+    with spark_jobs("lazy_ckpt.action") as at_action:
         assert ckpt.count() == 50
     # one job for the groupBy's shuffle stage, one for the broadcast
     assert len(at_call) == 2, at_call

@@ -1,13 +1,16 @@
 """``mldag_spark.materialize``: what ``scope()`` collects survives the
 block's actions and is released on exit, also after an explicit
 ``release``; with no scope open nothing is registered, so a frame
-outlives any unrelated scope."""
+outlives any unrelated scope. ``collect_bounded`` returns a frame's
+rows up to its cap and nothing past it."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mldag_spark.materialize import cache, checkpoint, release, scope
+from mldag_spark.materialize import (
+    cache, checkpoint, collect_bounded, release, scope,
+)
 
 
 def _frame(spark):
@@ -48,3 +51,13 @@ def test_no_scope_registers_nothing(spark, persistent_rdds):
     release(c)
     assert persistent_rdds() <= before
 
+
+
+def test_collect_bounded_returns_rows_at_the_cap_and_none_past_it(spark):
+    df = _frame(spark)
+    table = collect_bounded(df, 200)
+    assert table.num_rows == 200
+    assert table.column_names == ["id", "k"]
+    assert sorted(table.column("id").to_pylist()) == list(range(200))
+    assert collect_bounded(df, 199) is None
+    assert collect_bounded(df.limit(0), 0).num_rows == 0

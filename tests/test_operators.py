@@ -384,23 +384,33 @@ def test_salted_aggregate_explicit_specs(spark):
         salted_aggregate(df, ["k"], {"m": ("avg", "v")})
 
 
+def _packed_at(spark, df, max_tokens, n_parts):
+    """token_budget_batches rows with ``n_parts`` buckets (the session's
+    shuffle-partition count, restored afterwards)."""
+    from mldag_spark.operators.packing import token_budget_batches
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+    try:
+        return sorted(
+            (r["doc_id"], r["global_cum"], r["batch_id"])
+            for r in token_budget_batches(
+                df, "doc_id", "n_tokens", max_tokens=max_tokens
+            ).collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def test_token_budget_batches_partition_invariant(spark):
     """The distributed prefix-sum must produce identical global cumsums
     and batch ids at ANY partition count — a prefix sum over a total
     order cannot depend on where range boundaries fall."""
-    from mldag_spark.operators.packing import token_budget_batches
-
     rows = [(i, (i * 37) % 900 + 10) for i in range(200)]
     df = spark.createDataFrame(rows, ["doc_id", "n_tokens"])
 
     def run(n_parts):
-        return sorted(
-            (r["doc_id"], r["global_cum"], r["batch_id"])
-            for r in token_budget_batches(
-                df, "doc_id", "n_tokens", max_tokens=2048,
-                num_partitions=n_parts,
-            ).collect()
-        )
+        return _packed_at(spark, df, 2048, n_parts)
 
     base = run(1)
     # matches the sequential definition
@@ -445,19 +455,11 @@ def test_token_budget_batches_invariant_under_aqe_coalesce(spark):
     broke the old spark_partition_id formulation: AQE partition
     coalescing ON, and wildly different bucket counts (which previously
     meant different range exchanges between the two plan branches)."""
-    from mldag_spark.operators.packing import token_budget_batches
-
     rows = [(i, (i * 53) % 700 + 5) for i in range(300)]
     df = spark.createDataFrame(rows, ["doc_id", "n_tokens"])
 
     def run(n_parts):
-        return sorted(
-            (r["doc_id"], r["global_cum"], r["batch_id"])
-            for r in token_budget_batches(
-                df, "doc_id", "n_tokens", max_tokens=1024,
-                num_partitions=n_parts,
-            ).collect()
-        )
+        return _packed_at(spark, df, 1024, n_parts)
 
     conf = spark.conf
     prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
@@ -1735,27 +1737,48 @@ def test_bpe_encode_docs_matches_textbook_per_word_lengths(spark):
     assert got == want
 
 
-def test_bpe_checkpoint_batching_is_bit_identical(spark, persistent_rdds):
+# no lineage cut at any merge count a test reaches: the unbatched chain
+_UNBATCHED = 1 << 30
+
+
+def _bpe_learn_on(path, monkeypatch, docs, checkpoint_every=None, **kw):
+    """``bpe_learn`` on the ``"local"`` (driver) or ``"distributed"``
+    merge loop. The route follows the measured vocabulary size, so the
+    distributed loop is forced by a zero local-vocabulary cap; a
+    ``checkpoint_every`` sets the chain-batching interval for the
+    call."""
+    import mldag_spark.operators.tokenizer as tok
+
+    with monkeypatch.context() as mp:
+        if path == "distributed":
+            mp.setattr(tok, "_LOCAL_VOCAB_CAP", 0)
+        if checkpoint_every is not None:
+            mp.setattr(tok, "CHECKPOINT_EVERY", checkpoint_every)
+        return tok.bpe_learn(docs, **kw)
+
+
+def test_bpe_checkpoint_batching_is_bit_identical(
+    spark, monkeypatch, persistent_rdds
+):
     """Chain batching is an execution detail, not a semantics change:
     learning with a tiny checkpoint interval must produce the SAME
     merge table and the SAME encoded vocabulary, row for row, as the
-    unbatched chain (checkpoint_every=None). Each snapshot releases the
-    one it supersedes, so only the final one (backing the returned
-    vocabulary) stays persisted."""
-    from mldag_spark.operators.tokenizer import bpe_learn
-
+    unbatched chain. Each snapshot releases the one it supersedes, so
+    only the final one (backing the returned vocabulary) stays
+    persisted."""
     wc = {"aaaaa": 3, "ab": 5, "cd": 5, "abab": 2, "abcd": 1, "bcbc": 2}
     docs = _bpe_docs(spark, wc)
     before = persistent_rdds()
-    # the chain under test is the DISTRIBUTED one (auto would route
-    # this tiny vocab to the local trainer since r13)
-    m_batched, enc_batched = bpe_learn(
-        docs, n_merges=9, checkpoint_every=2, trainer="distributed"
+    # the chain under test is the DISTRIBUTED one (this tiny vocab
+    # would otherwise train on the driver)
+    m_batched, enc_batched = _bpe_learn_on(
+        "distributed", monkeypatch, docs, checkpoint_every=2, n_merges=9
     )
     assert len(m_batched) >= 4  # at least two snapshots were written
     assert len(persistent_rdds() - before) == 1
-    m_plain, enc_plain = bpe_learn(
-        docs, n_merges=9, checkpoint_every=None, trainer="distributed"
+    m_plain, enc_plain = _bpe_learn_on(
+        "distributed", monkeypatch, docs, checkpoint_every=_UNBATCHED,
+        n_merges=9,
     )
     assert m_batched == m_plain
     rows_b = sorted((r["s"], r["cnt"]) for r in enc_batched.collect())
@@ -1763,13 +1786,11 @@ def test_bpe_checkpoint_batching_is_bit_identical(spark, persistent_rdds):
     assert rows_b == rows_p
 
 
-def test_bpe_checkpoint_bounds_plan_depth(spark):
+def test_bpe_checkpoint_bounds_plan_depth(spark, monkeypatch):
     """The production-merge-count fix (VERDICT r11 #1): the analyzed
     plan of the encoded vocabulary must carry at most
-    ``checkpoint_every`` nested ``replace`` expressions, however many
+    ``CHECKPOINT_EVERY`` nested ``replace`` expressions, however many
     merges were learned — the unbatched chain grows one per merge."""
-    from mldag_spark.operators.tokenizer import bpe_learn
-
     wc = {"aaaaa": 3, "ab": 5, "cd": 5, "abab": 2, "abcd": 1, "bcbc": 2}
     docs = _bpe_docs(spark, wc)
 
@@ -1781,33 +1802,31 @@ def test_bpe_checkpoint_bounds_plan_depth(spark):
         plan = df._jdf.queryExecution().analyzed().toString()
         return len(re.findall(r"(?<![a-z_])replace\(", plan))
 
-    _m, enc = bpe_learn(
-        docs, n_merges=8, checkpoint_every=3, trainer="distributed"
+    _m, enc = _bpe_learn_on(
+        "distributed", monkeypatch, docs, checkpoint_every=3, n_merges=8
     )
     # checkpoints fire after merges 3 and 6; merges 7-8 remain chained
     assert replace_depth(enc) <= 3
-    _m2, enc_plain = bpe_learn(
-        docs, n_merges=8, checkpoint_every=None, trainer="distributed"
+    _m2, enc_plain = _bpe_learn_on(
+        "distributed", monkeypatch, docs, checkpoint_every=_UNBATCHED,
+        n_merges=8,
     )
     assert replace_depth(enc_plain) == 8
 
 
-def test_bpe_apply_checkpointing_matches_learn(spark):
+def test_bpe_apply_checkpointing_matches_learn(spark, monkeypatch):
     """Artifact-driven encoding (bpe_apply) with chain batching is
     bit-identical to learn-time encoding — the parquet-round-trip
     production path stays exact under the depth fix."""
-    from mldag_spark.operators.tokenizer import (
-        bpe_apply, bpe_learn, symbolize, word_vocab,
-    )
+    import mldag_spark.operators.tokenizer as tok
 
     wc = {"aaaaa": 3, "ab": 5, "cd": 5, "abab": 2, "abcd": 1}
     docs = _bpe_docs(spark, wc)
-    merges, enc_learn = bpe_learn(
-        docs, n_merges=7, checkpoint_every=2, trainer="distributed"
+    merges, enc_learn = _bpe_learn_on(
+        "distributed", monkeypatch, docs, checkpoint_every=2, n_merges=7
     )
-    enc_apply = bpe_apply(
-        symbolize(word_vocab(docs)), merges, checkpoint_every=3
-    )
+    monkeypatch.setattr(tok, "CHECKPOINT_EVERY", 3)
+    enc_apply = tok.bpe_apply(tok.symbolize(tok.word_vocab(docs)), merges)
     assert sorted((r["s"], r["cnt"]) for r in enc_learn.collect()) == sorted(
         (r["s"], r["cnt"]) for r in enc_apply.collect()
     )
@@ -2291,16 +2310,18 @@ def _bpe_rich_wc(n_words=90, seed=7):
     return wc
 
 
-def test_bpe_local_trainer_bit_identical_at_64_plus_merges(spark):
+def test_bpe_local_trainer_bit_identical_at_64_plus_merges(
+    spark, monkeypatch
+):
     """The judge's done-bar (VERDICT r12 #1): merges AND the encoded
-    vocabulary from trainer='local' must be bit-identical to the
-    distributed argmax/replace loop at n_merges >= 64 (crossing a
-    checkpoint_every=64 lineage cut on the distributed side)."""
-    from mldag_spark.operators.tokenizer import bpe_learn
-
+    vocabulary from the local trainer must be bit-identical to the
+    distributed argmax/replace loop at n_merges >= 64 (crossing the
+    CHECKPOINT_EVERY=64 lineage cut on the distributed side)."""
     docs = _bpe_docs(spark, _bpe_rich_wc())
-    m_dist, enc_dist = bpe_learn(docs, n_merges=70, trainer="distributed")
-    m_loc, enc_loc = bpe_learn(docs, n_merges=70, trainer="local")
+    m_dist, enc_dist = _bpe_learn_on(
+        "distributed", monkeypatch, docs, n_merges=70
+    )
+    m_loc, enc_loc = _bpe_learn_on("local", monkeypatch, docs, n_merges=70)
     assert len(m_dist) >= 64, "fixture lacks merge capacity"
     assert m_loc == m_dist
     assert sorted((r["s"], r["cnt"]) for r in enc_loc.collect()) == sorted(
@@ -2308,18 +2329,16 @@ def test_bpe_local_trainer_bit_identical_at_64_plus_merges(spark):
     )
 
 
-def test_bpe_local_trainer_respects_top_words_cap(spark):
+def test_bpe_local_trainer_respects_top_words_cap(spark, monkeypatch):
     """Capped local training must match capped distributed training —
     the production layout (top_words caps the vocab, the local loop
     trains on exactly the same capped rows)."""
-    from mldag_spark.operators.tokenizer import bpe_learn
-
     docs = _bpe_docs(spark, _bpe_rich_wc(n_words=40, seed=11))
-    m_dist, enc_dist = bpe_learn(
-        docs, n_merges=20, top_words=25, trainer="distributed"
+    m_dist, enc_dist = _bpe_learn_on(
+        "distributed", monkeypatch, docs, n_merges=20, top_words=25
     )
-    m_loc, enc_loc = bpe_learn(
-        docs, n_merges=20, top_words=25, trainer="local"
+    m_loc, enc_loc = _bpe_learn_on(
+        "local", monkeypatch, docs, n_merges=20, top_words=25
     )
     assert m_loc == m_dist
     assert sorted((r["s"], r["cnt"]) for r in enc_loc.collect()) == sorted(
@@ -2328,10 +2347,10 @@ def test_bpe_local_trainer_respects_top_words_cap(spark):
 
 
 def test_bpe_trainer_auto_routes_by_measured_size(spark, monkeypatch):
-    """auto = local when top_words is set (capped == closure-sized by
-    contract) AND when an uncapped vocabulary MEASURES under the local
-    cap (one count aggregate); only a vocabulary that is actually
-    unbounded pays the distributed loop."""
+    """The local trainer runs when the vocabulary MEASURES under the
+    local cap, capped by top_words or not (one bounded collect); only
+    a vocabulary that is actually unbounded pays the distributed
+    loop."""
     import mldag_spark.operators.tokenizer as tok
 
     calls = []
@@ -2343,45 +2362,78 @@ def test_bpe_trainer_auto_routes_by_measured_size(spark, monkeypatch):
 
     monkeypatch.setattr(tok, "_bpe_learn_local", spy)
     docs = _bpe_docs(spark, {"ab": 3, "cd": 2})
-    tok.bpe_learn(docs, n_merges=1, top_words=2)   # auto + cap -> local
+    tok.bpe_learn(docs, n_merges=1, top_words=2)   # capped -> local
     assert calls == [1]
-    tok.bpe_learn(docs, n_merges=1)  # auto, uncapped but tiny -> local
+    tok.bpe_learn(docs, n_merges=1)  # uncapped but tiny -> local
     assert calls == [1, 1]
     monkeypatch.setattr(tok, "_LOCAL_VOCAB_CAP", 1)
     tok.bpe_learn(docs, n_merges=1)  # measures over the cap -> distributed
     assert calls == [1, 1]
-    with __import__("pytest").raises(ValueError, match="unknown trainer"):
-        tok.bpe_learn(docs, n_merges=1, trainer="remote")
 
 
-def test_bpe_local_trainer_bounded_collect(spark):
-    """An uncapped local request still obeys the bounded-collect law:
-    the vocab collect is capped, never an unbounded driver pull."""
+def test_bpe_measures_and_collects_its_vocabulary_in_one_action(
+    spark, spark_jobs
+):
+    """The route decision and the local trainer's input are one
+    bounded collect of the cached vocabulary: ``bpe_learn`` runs as
+    many jobs as that single action does on its own (a count to
+    measure, then a second collect, took two actions)."""
+    from mldag_spark.materialize import cache, collect_bounded, release
+    from mldag_spark.operators.tokenizer import bpe_learn, word_vocab
+
+    docs = _bpe_docs(spark, {"ab": 3, "cd": 2, "abcd": 1})
+    with spark_jobs("bpe.one_collect.reference") as ref:
+        vocab = cache(word_vocab(docs))
+        assert collect_bounded(vocab, 10).num_rows == 3
+    release(vocab)
+    with spark_jobs("bpe.one_collect.learn") as ids:
+        merges, _ = bpe_learn(docs, n_merges=2)
+    assert len(merges) == 2
+    assert len(ids) == len(ref), (ids, ref)
+
+
+def test_bpe_local_trainer_bounded_collect(spark, monkeypatch):
+    """An uncapped vocabulary still obeys the bounded-collect law: the
+    vocab collect is capped, never an unbounded driver pull. Over the
+    cap it brings nothing back to the local trainer, and the merges
+    come from the distributed loop."""
     import mldag_spark.operators.tokenizer as tok
-    import pytest
 
+    seen, local = [], []
+    real_collect, real_local = tok.collect_bounded, tok._bpe_learn_local
+
+    def collect_spy(df, cap):
+        out = real_collect(df, cap)
+        seen.append((cap, out))
+        return out
+
+    def local_spy(*a, **kw):
+        local.append(1)
+        return real_local(*a, **kw)
+
+    monkeypatch.setattr(tok, "collect_bounded", collect_spy)
+    monkeypatch.setattr(tok, "_bpe_learn_local", local_spy)
+    monkeypatch.setattr(tok, "_LOCAL_VOCAB_CAP", 2)
     docs = _bpe_docs(spark, {"ab": 1, "cd": 1, "ef": 1})
-    old = tok._LOCAL_VOCAB_CAP
-    try:
-        tok._LOCAL_VOCAB_CAP = 2
-        with pytest.raises(ValueError, match="bounded by contract"):
-            tok.bpe_learn(docs, n_merges=1, trainer="local")
-    finally:
-        tok._LOCAL_VOCAB_CAP = old
+    merges, _ = tok.bpe_learn(docs, n_merges=1)
+    assert seen == [(2, None)]
+    assert local == [] and len(merges) == 1
 
 
-def test_bpe_control_char_words_train_identically_local_vs_dist(spark):
+def test_bpe_control_char_words_train_identically_local_vs_dist(
+    spark, monkeypatch
+):
     """ADVICE r13 #1: normalize_text only collapses whitespace, so
     words CAN carry ASCII control characters (< 0x20). Any such
     character except the SOH/EOT delimiters round-trips the delimited
     encoding faithfully, and local/distributed tie-break ordering must
     agree on it (UTF-8 byte order == code-point order)."""
-    from mldag_spark.operators.tokenizer import bpe_learn
-
     # "\x01a" vs "aa": pair ("\x01","a") vs ("a","a") can tie on count
     docs = _bpe_docs(spark, {"\x01a": 3, "aa": 3, "b\x02b": 2})
-    m_dist, enc_dist = bpe_learn(docs, n_merges=4, trainer="distributed")
-    m_loc, enc_loc = bpe_learn(docs, n_merges=4, trainer="local")
+    m_dist, enc_dist = _bpe_learn_on(
+        "distributed", monkeypatch, docs, n_merges=4
+    )
+    m_loc, enc_loc = _bpe_learn_on("local", monkeypatch, docs, n_merges=4)
     assert m_loc == m_dist
     assert sorted((r["s"], r["cnt"]) for r in enc_loc.collect()) == sorted(
         (r["s"], r["cnt"]) for r in enc_dist.collect()
@@ -2391,21 +2443,21 @@ def test_bpe_control_char_words_train_identically_local_vs_dist(spark):
     assert m_dist[0].left == "\x01"
 
 
-def test_bpe_delimiter_bearing_words_are_excluded_everywhere(spark):
+def test_bpe_delimiter_bearing_words_are_excluded_everywhere(
+    spark, monkeypatch
+):
     """A word containing SOH/EOT (0x1E/0x1F) cannot be represented in
     the delimited encoding; word_vocab excludes it uniformly, so both
     trainers see the same corpus and neither corrupts."""
-    from mldag_spark.operators.tokenizer import (
-        EOT, SOH, bpe_learn, word_vocab,
-    )
+    from mldag_spark.operators.tokenizer import EOT, SOH, word_vocab
 
     docs = _bpe_docs(
         spark, {"ab": 3, f"x{SOH}y": 2, f"p{EOT}": 2, "cd": 1}
     )
     vocab = {r["w"] for r in word_vocab(docs).collect()}
     assert vocab == {"ab", "cd"}
-    m_dist, _ = bpe_learn(docs, n_merges=2, trainer="distributed")
-    m_loc, _ = bpe_learn(docs, n_merges=2, trainer="local")
+    m_dist, _ = _bpe_learn_on("distributed", monkeypatch, docs, n_merges=2)
+    m_loc, _ = _bpe_learn_on("local", monkeypatch, docs, n_merges=2)
     assert m_loc == m_dist
     assert all(
         SOH not in s and EOT not in s

@@ -1,14 +1,18 @@
-"""Checks on the scripts and on citations of them; all Spark-free but
-one, which runs scripts/dump_plans.py in a subprocess.
+"""Checks on the scripts, on citations of them and on one engine
+idiom; all Spark-free but one, which runs scripts/dump_plans.py in a
+subprocess.
 
 A script that builds its own session without the engine's confs gates
 or measures plans no caller gets; one that runs queries outside a
 ``materialize.scope()`` carries their blocks into the next query; a
-cited ``scripts/<name>.py`` that was deleted sends the reader nowhere.
+cited ``scripts/<name>.py`` that was deleted sends the reader nowhere;
+a size probe written outside ``materialize.collect_bounded`` costs the
+extra Spark action that function exists to save.
 """
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -46,6 +50,53 @@ def test_cited_script_paths_exist():
     dangling = sorted(c for c in cited
                       if not (REPO / "scripts" / c[0]).is_file())
     assert not dangling, dangling
+
+
+def _size_probes(tree: ast.AST):
+    """(function, line) of each ``X.limit(n + 1)`` that is not a
+    top-(n+1) sort-limit, and of each ``X.limit(n).count()``."""
+    found = []
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            recv = node.func.value
+            arg = node.args[0] if node.args else None
+            plus_one = (isinstance(arg, ast.BinOp)
+                        and isinstance(arg.op, ast.Add)
+                        and isinstance(arg.right, ast.Constant)
+                        and arg.right.value == 1)
+            ordered = (isinstance(recv, ast.Call)
+                       and isinstance(recv.func, ast.Attribute)
+                       and recv.func.attr in ("orderBy", "sort"))
+            if node.func.attr == "limit" and plus_one and not ordered:
+                found.append((fn, node.lineno))
+            if (node.func.attr == "count" and isinstance(recv, ast.Call)
+                    and isinstance(recv.func, ast.Attribute)
+                    and recv.func.attr == "limit"):
+                found.append((fn, node.lineno))
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(tree, None)
+    return found
+
+
+def test_size_decisions_go_through_collect_bounded():
+    # finish-on-the-driver decisions are made once, in
+    # materialize.collect_bounded: one limit(cap + 1) action that
+    # measures and fetches together
+    probes = {
+        (str(p.relative_to(REPO)), fn, line)
+        for p in (REPO / "mldag_spark").rglob("*.py")
+        for fn, line in _size_probes(ast.parse(p.read_text()))
+    }
+    assert {(path, fn) for path, fn, _ in probes} == {
+        ("mldag_spark/materialize.py", "collect_bounded")}, sorted(probes)
+    sample = ast.parse("a = df.limit(cap + 1).count()\n"
+                       "b = df.orderBy('c').limit(k + 1).collect()\n")
+    assert [line for _, line in _size_probes(sample)] == [1, 1]
 
 
 def test_plan_normalize_masks_stream_workdirs():
