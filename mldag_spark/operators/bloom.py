@@ -83,8 +83,6 @@ def bloom_build(
     col: str,
     m_bits: int = BLOOM_M_BITS,
     k: int = BLOOM_K,
-    merge: str = "auto",
-    tree_merge_threshold: int = BLOOM_TREE_MERGE_THRESHOLD,
 ) -> bytes:
     """Build the m-bit filter over ``df[col]`` and return the bitmap.
 
@@ -95,13 +93,15 @@ def bloom_build(
     ``m_bits`` to the small side's cardinality (~16 bits/element
     keeps FPR < 0.5% at k=4).
 
-    Partial-bitmap merge (``merge``):
+    Partial-bitmap merge, chosen from |partitions|·m/8, the bytes of
+    partials a driver merge would collect:
 
-    - ``"driver"`` — the driver ORs the ≤|partitions| partials (m/8
-      bytes each). Right for registry-sized filters.
-    - ``"tree"`` — each partition's kernel emits its bitmap as
-      chunk-keyed pieces tagged with the source partition id; the
-      copies of each chunk are then OR-reduced through
+    - up to ``BLOOM_TREE_MERGE_THRESHOLD`` (read at call time), the
+      driver ORs the ≤|partitions| partials (m/8 bytes each). Right
+      for registry-sized filters.
+    - above it, the tree merge: each partition's kernel emits its
+      bitmap as chunk-keyed pieces tagged with the source partition
+      id; the copies of each chunk are then OR-reduced through
       ceil(log_fanout(|partitions|)) ``groupBy(chunk, src // fanout)``
       levels, each task touching at most ``_BLOOM_TREE_FANOUT``
       copies (per-task memory <= fanout·chunk bytes, CONSTANT in
@@ -111,15 +111,11 @@ def bloom_build(
       same |partitions|·m/8 bytes the driver path would collect,
       spread across the cluster, and each further level shrinks it
       fanout×.
-    - ``"auto"`` (default) — ``"tree"`` once |partitions|·m/8 exceeds
-      ``tree_merge_threshold``, else ``"driver"``.
 
     Both paths are bit-identical by construction (OR is associative/
     commutative; pinned by test)."""
     if m_bits % 8:
         raise ValueError("m_bits must be a multiple of 8")
-    if merge not in ("auto", "driver", "tree"):
-        raise ValueError(f"unknown merge {merge!r}")
     h1, h2 = _h1h2(F.col(col))
     # NULLs are not members: md5(NULL) is NULL and would reach the
     # kernel as NaN positions (int-cast crash); drop them here, and
@@ -130,16 +126,11 @@ def bloom_build(
         ).alias("p")
     )
     nbytes = m_bits // 8
-    # one plan->RDD conversion serves both the auto routing and the
-    # tree reduction width (code-review r13 finding #6)
-    n_parts = (
-        max(pos.rdd.getNumPartitions(), 1)
-        if merge in ("auto", "tree") else 1
-    )
-    if merge == "auto":
-        merge = "tree" if n_parts * nbytes > tree_merge_threshold else "driver"
+    # one plan->RDD conversion serves both the routing and the tree
+    # reduction width (code-review r13 finding #6)
+    n_parts = max(pos.rdd.getNumPartitions(), 1)
 
-    if merge == "driver":
+    if n_parts * nbytes <= BLOOM_TREE_MERGE_THRESHOLD:
         def kernel(batches):
             bm = np.zeros(nbytes, dtype=np.uint8)
             seen = False
@@ -200,7 +191,7 @@ def bloom_build(
         "src", F.spark_partition_id().cast("long")
     ).mapInPandas(chunk_kernel, "ci long, src long, bm binary")
     # OR is associative/commutative, so any reduction tree yields the
-    # same bitmap (bit-identity vs "driver" pinned by test). Each
+    # same bitmap (bit-identity vs the driver merge pinned by test). Each
     # level groups CONSECUTIVE src ranges of size fanout
     # (floor(src / fanout), which also becomes the next level's src),
     # so a task gathers at most fanout copies of a chunk BY

@@ -424,7 +424,6 @@ def jaccard_prefix_pairs(
     id_col: str,
     elem_col: str,
     threshold: float = 0.8,
-    positional: bool = True,
 ) -> DataFrame:
     """EXACT Jaccard >= ``threshold`` pairs via prefix filtering — the
     all-pairs similarity join of SSJoin/PPJoin (Chaudhuri et al.
@@ -465,12 +464,12 @@ def jaccard_prefix_pairs(
     window — more candidates, never a lost pair — so the zero-
     false-negative claim is unconditional.
 
-    Positional filter (``positional=True``, r8 — the PPJoin prune of
-    Xiao et al. §3.2): the prefix join also carries each matched
-    element's rank. For a match at ranks (rA, rB) in docs of sizes
-    (nA, nB), every OTHER common element is globally either before
-    the match (rank < rA in A and < rB in B: at most min(rA,rB)-1)
-    or after it (at most min(nA-rA, nB-rB)), so overlap <=
+    Positional filter (r8 — the PPJoin prune of Xiao et al. §3.2):
+    the prefix join also carries each matched element's rank. For a
+    match at ranks (rA, rB) in docs of sizes (nA, nB), every OTHER
+    common element is globally either before the match (rank < rA
+    in A and < rB in B: at most min(rA,rB)-1) or after it (at most
+    min(nA-rA, nB-rB)), so overlap <=
     min(rA,rB) + min(nA-rA, nB-rB) — an exact integer upper bound.
     J >= t forces overlap >= ceil(t·(nA+nB)/(1+t)) (= ceil(num·(nA+nB)
     / (num+den)), bigint ``div``); a pair survives only if SOME
@@ -557,23 +556,20 @@ def jaccard_prefix_pairs(
         F.col("a._n").alias("_na"),
         F.col("b._n").alias("_nb"),
     )
-    if positional:
-        # overlap upper bound contributed by THIS matched element
-        ubound = F.least(F.col("_ra"), F.col("_rb")) + F.least(
-            F.col("_na") - F.col("_ra"), F.col("_nb") - F.col("_rb")
-        )
-        # required overlap: ceil(num·(na+nb) / (num+den)), bigint-exact
-        o_min = F.expr(
-            f"({num}L * (_na + _nb) + {num + den - 1}L) div {num + den}L"
-        )
-        candidates = (
-            joined.groupBy("doc_a", "doc_b")
-            .agg(F.max(ubound).alias("_ub"), F.first(o_min).alias("_omin"))
-            .filter(F.col("_ub") >= F.col("_omin"))
-            .select("doc_a", "doc_b")
-        )
-    else:
-        candidates = joined.select("doc_a", "doc_b").distinct()
+    # overlap upper bound contributed by THIS matched element
+    ubound = F.least(F.col("_ra"), F.col("_rb")) + F.least(
+        F.col("_na") - F.col("_ra"), F.col("_nb") - F.col("_rb")
+    )
+    # required overlap: ceil(num·(na+nb) / (num+den)), bigint-exact
+    o_min = F.expr(
+        f"({num}L * (_na + _nb) + {num + den - 1}L) div {num + den}L"
+    )
+    candidates = (
+        joined.groupBy("doc_a", "doc_b")
+        .agg(F.max(ubound).alias("_ub"), F.first(o_min).alias("_omin"))
+        .filter(F.col("_ub") >= F.col("_omin"))
+        .select("doc_a", "doc_b")
+    )
     # hand verification the SAME distinct element-row subtree the
     # prefix was built from (not the raw rows): Catalyst canonicalizes
     # the shared aggregate, so the parquet scan + explode + distinct
@@ -1348,7 +1344,6 @@ def substring_spans(
     token_col: str,
     window: int = 50,
     min_docs: int = 2,
-    hash_fingerprints: bool = False,
 ) -> DataFrame:
     """Maximal cross-document repeated token spans — the
     substring-level dedup family (Lee et al. 2022, "Deduplicating
@@ -1364,7 +1359,7 @@ def substring_spans(
 
     1. every ``window``-token window per document, map-only (the
        shingle_rows zip-slice shape, plus positions via posexplode);
-    2. groupBy(window text) → distinct-document count: a window is
+    2. groupBy(window key) → distinct-document count: a window is
        duplicated iff it appears in >= ``min_docs`` DISTINCT docs
        (within-doc repeats alone don't qualify);
     3. equi-join the (doc, pos, window) rows back to the duplicated
@@ -1383,12 +1378,15 @@ def substring_spans(
     semantics for training-data cleaning and is pinned by a brute-force
     test.
 
-    Scale: the window GROUP BY is the only corpus-wide shuffle (keys =
-    window text; a production run at 100 TB swaps the raw text key for
-    ``xxhash64(win, seed)`` pairs — 128 collision-safe bits — shrinking
-    shuffle bytes ~10x; the string form is kept here so the DuckDB
-    oracle can recompute it). The join-back is window-keyed, linear;
-    the span merge shuffles one row per MARKED position only.
+    Scale: the window GROUP BY is the only corpus-wide shuffle. Its key
+    is two ``xxhash64`` seeds of the window text (128 bits: a false
+    merge of two distinct windows has probability ~2⁻¹²⁸ per pair),
+    never the W-token string, which measured 2.7-2.8x more
+    groupBy/join shuffle bytes at sf3.0 and sf10 for the same spans
+    (SCALING.json ``substring_hashed_key``). The key never leaves the
+    function, and the DuckDB oracles build their own string windows.
+    The join-back is window-keyed, linear; the span merge shuffles one
+    row per MARKED position only.
 
     Returns (id, span_start, span_end, span_tokens, n_windows),
     positions 1-based inclusive on the token array.
@@ -1407,20 +1405,13 @@ def substring_spans(
         *[F.slice("_t", i + 1, m) for i in range(window)]
     )
     win_text = F.concat_ws(" ", *[F.col(f"_z.{i}") for i in range(window)])
-    # production shuffle key (hash_fingerprints=True): two independent
-    # xxhash64 seeds of the window text — 128 collision-safe bits —
-    # instead of the W-token string itself; measured 2.7-2.8x fewer
-    # groupBy/join shuffle bytes at sf3.0/sf10 (SCALING.json
-    # `substring_hashed_key`). The string key stays the default so
-    # the DuckDB oracle can recompute it; a test pins hashed ==
-    # string results.
-    win_key = (
-        F.struct(
-            F.xxhash64(win_text, F.lit(1)).alias("h1"),
-            F.xxhash64(win_text, F.lit(2)).alias("h2"),
-        )
-        if hash_fingerprints
-        else win_text
+    # the shuffle key: two independent xxhash64 seeds of the window
+    # text (128 bits) rather than the W-token string, which is 2.7-2.8x
+    # the groupBy/join shuffle bytes (SCALING.json
+    # `substring_hashed_key`); the brute-force tests pin the spans
+    win_key = F.struct(
+        F.xxhash64(win_text, F.lit(1)).alias("h1"),
+        F.xxhash64(win_text, F.lit(2)).alias("h2"),
     )
     wins = pre.select(
         F.col(id_col),

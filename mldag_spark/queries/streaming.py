@@ -543,46 +543,24 @@ def stream_pipeline_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete-mode dedup state carries the representative text; a
     production run keeps (hash, doc_id) state and re-joins text from
     storage, which changes bytes-in-state, not survivors. (2) the
-    2^20-bit bitmap here is the ORACLE-pinned arithmetic, right for
-    gate-scale test splits; at scale a fixed-size filter SATURATES
-    (measured at sf10: every probe a hit → zero survivors) —
-    production sizes it with ``bloom_sized_m_bits`` from the test
-    split's measured shingle count (the ``m_bits`` parameter of
-    :func:`pipeline_clean_stream_frame`; sized-variant scale row in
-    SCALING ``stream_pipeline_clean``)."""
-    return pipeline_clean_stream_frame(spark, sf_dir)
-
-
-def pipeline_clean_stream_frame(
-    spark: SparkSession, sf_dir: str, m_bits: "int | str | None" = None
-) -> DataFrame:
-    """The composed streaming pipeline behind
-    ``stream_pipeline_clean``, with the bloom bitmap size exposed:
-    ``m_bits=None`` keeps the oracle-pinned 2^20 default;
-    ``m_bits="auto"`` (r15, completing VERDICT r14 #4) routes through
-    ``bloom_build_sized`` — measured distinct-shingle count, sized
-    floor-up, sharded automatically over the 2^32-bit cap, with the
-    per-row hit counter routing shards by the same ``_h3`` slice —
-    so the production path no longer dead-ends where
-    ``bloom_sized_m_bits`` used to raise; an explicit int pins a
-    size."""
-    from mldag_spark.functions import shingle_rows
-    from mldag_spark.operators.bloom import (
-        bloom_build,
-        bloom_build_sized,
-        bloom_distinct_hits,
-    )
+    bloom is sized from the test split's measured distinct-shingle
+    count (``decontamination_bloom``, the batch decontamination
+    route): one approx-count action, then a bitmap of 16 bits per
+    element floored at 2^20, sharded over the 2^32-bit cap. At every
+    gate scale the size is that floor, the arithmetic the oracle
+    replays. A fixed 2^20-bit filter SATURATES as the split grows
+    (measured at sf10: every probe a hit, zero survivors), where the
+    sized one keeps survivors corpus-linear (SCALING
+    ``stream_pipeline_clean``)."""
+    from mldag_spark.operators.bloom import bloom_distinct_hits
     from mldag_spark.queries.tables import load
     from mldag_spark.queries.text import (
-        _BLOOM_M,
         _split_bucket,
+        decontamination_bloom,
         pipeline_clean_stage,
         pipeline_dedup_stage,
         pipeline_gate_exprs,
     )
-
-    if m_bits is None:
-        m_bits = _BLOOM_M
 
     # batch-side bloom artifact over the pipeline's own test split —
     # built with the SHARED front-half stage contract (queries/
@@ -591,17 +569,9 @@ def pipeline_clean_stream_frame(
     d = load(spark, sf_dir, "documents")
     _n, _dr, keep = pipeline_gate_exprs()
     scored = pipeline_dedup_stage(pipeline_clean_stage(d)).filter(keep)
-    test = scored.withColumn("bucket", _split_bucket()).filter(
-        F.col("bucket") >= 90
-    )
-    sh = shingle_rows(test, "doc_id", "clean", 5, complete_only=True)
-    elems = sh.select(F.col("shingle").alias("s"))
-    if m_bits == "auto":
-        bitmaps = bloom_build_sized(elems, "s", floor_bits=_BLOOM_M)
-        n_hits = bloom_distinct_hits(bitmaps)
-    else:
-        bitmap = bloom_build(elems, "s", m_bits=m_bits)
-        n_hits = bloom_distinct_hits(bitmap, m_bits=m_bits)
+    n_hits = bloom_distinct_hits(decontamination_bloom(
+        scored.withColumn("bucket", _split_bucket()), text_col="clean"
+    ))
 
     stream = pipeline_clean_stage(S.documents_stream(spark, sf_dir))
     agg = stream.groupBy(F.md5(F.col("clean")).alias("_h")).agg(

@@ -1554,23 +1554,22 @@ def text_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     Why it exists: the exact pass shuffles every train shingle
     through an inverted-index join, but the join's other side — the
     benchmark corpus — is SMALL by construction. Here the test
-    shingles build a 2^20-bit filter in one map-only pass (per-
-    partition numpy bitmaps, driver ORs <= |partitions| 128 KiB
-    partials), the bitmap rides in task closures, and the 100 TB
-    train side is probed MAP-ONLY: the only shuffle in the whole
-    query is the distinct on HIT shingle rows (contamination-sized,
+    shingles build a sized filter in one map-only pass (per-
+    partition numpy bitmaps, driver ORs <= |partitions| partials),
+    the bitmap rides in task closures, and the 100 TB train side is
+    probed MAP-ONLY: the only shuffle in the whole query is the
+    distinct on HIT shingle rows (contamination-sized,
     not corpus-sized). The price is a deterministic, arithmetic-
     defined false-positive set — extra drops, never missed
     contamination, the safe direction for decontamination. The
     DuckDB oracle replays the exact bloom arithmetic (position-set
     semi-join), so the gate compares identical results, FPs
     included; tests/test_operators.py pins the superset property
-    (bloom drops ⊇ exact drops) against the exact pass. The 2^20
-    size is the ORACLE-pinned gate arithmetic; at scale a fixed
-    filter saturates into all-drops (measured, SCALING
-    ``stream_pipeline_clean``) — production sizes via
-    ``operators.bloom.bloom_sized_m_bits`` from the measured test
-    shingle count."""
+    (bloom drops ⊇ exact drops) against the exact pass. The filter
+    is sized from the measured test shingle count
+    (:func:`decontamination_bloom`), so it never saturates into
+    all-drops at scale (SCALING ``stream_pipeline_clean``), and at
+    every gate scale the size is the 2^20 floor the oracle replays."""
     d = load(spark, sf_dir, "documents")
     docs = d.withColumn("bucket", _split_bucket())
     bitmap = decontamination_bloom(docs)
@@ -1586,12 +1585,12 @@ def _split_bucket():
 
 
 def decontamination_bloom(
-    docs: DataFrame, m_bits: int | None = None
+    docs: DataFrame, text_col: str = "text"
 ) -> list[bytes]:
     """Build the test-split bloom set (k=4) from a documents frame
     carrying the md5 ``bucket`` column — one map-only pass over the
-    test slice's complete 5-grams (dup-bearing rows: the OR is
-    idempotent, so no distinct and no shuffle).
+    complete 5-grams of the test slice's ``text_col`` (dup-bearing
+    rows: the OR is idempotent, so no distinct and no shuffle).
 
     Sizing (r15, VERDICT r14 #4): routed through
     ``operators.bloom.bloom_build_sized`` — ONE approx-count pass
@@ -1609,17 +1608,14 @@ def decontamination_bloom(
     the floor the divergence is a LOUD hash-mismatch red, not silent
     corruption — and sizing deliberately diverges there, because a
     saturated filter's "match" is the wrong answer, not a gate
-    property worth preserving.
-    ``m_bits`` pins the old fixed-size arithmetic for tests."""
+    property worth preserving."""
     from mldag_spark.functions import shingle_rows
-    from mldag_spark.operators.bloom import bloom_build, bloom_build_sized
+    from mldag_spark.operators.bloom import bloom_build_sized
 
     sh = shingle_rows(
-        docs.filter(F.col("bucket") >= 90), "doc_id", "text", 5,
+        docs.filter(F.col("bucket") >= 90), "doc_id", text_col, 5,
         complete_only=True,
     ).select(F.col("shingle").alias("s"))
-    if m_bits is not None:
-        return [bloom_build(sh, "s", m_bits=m_bits)]
     return bloom_build_sized(sh, "s", floor_bits=_BLOOM_M)
 
 

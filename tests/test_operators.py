@@ -819,17 +819,15 @@ def test_jaccard_prefix_pairs_exact_vs_bruteforce(spark):
             if len(corpora[a] & corpora[b])
             / len(corpora[a] | corpora[b]) >= t
         )
-        # both candidate modes must be exact: the r8 positional
-        # (PPJoin) filter is a strictly-tighter zero-false-negative
-        # prune over the same prefix join
-        for positional in (True, False):
-            got = sorted(
-                (r["doc_a"], r["doc_b"], r["jaccard"])
-                for r in jaccard_prefix_pairs(
-                    rows, "doc_id", "elem", t, positional=positional
-                ).collect()
-            )
-            assert got == want, (t, positional, got, want)
+        # the r8 positional (PPJoin) filter is a zero-false-negative
+        # prune over the prefix join: the pairs stay exact
+        got = sorted(
+            (r["doc_a"], r["doc_b"], r["jaccard"])
+            for r in jaccard_prefix_pairs(
+                rows, "doc_id", "elem", t
+            ).collect()
+        )
+        assert got == want, (t, got, want)
 
 
 def test_jaccard_prefix_pairs_partition_invariant(spark):
@@ -1318,22 +1316,32 @@ def test_substring_spans_randomized_matches_bruteforce(spark):
     from mldag_spark.functions import tokenize
     from mldag_spark.operators.dedup import substring_spans
 
-    rng = random.Random(11)
-    vocab = [f"w{i}" for i in range(12)]  # small vocab → real repeats
-    corpus = [
-        (d, " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 40))))
-        for d in range(30)
-    ]
-    df = spark.createDataFrame(corpus, "doc_id long, text string")
-    pre = df.select("doc_id", tokenize(F.col("text")).alias("toks"))
-    for w in (4, 7):
-        got = {
-            tuple(r)
-            for r in substring_spans(
-                pre, "doc_id", "toks", window=w, min_docs=2
-            ).collect()
-        }
-        assert got == _spans_bruteforce(corpus, window=w), w
+    def corpus(seed, n_vocab, lo, hi, n_docs):
+        rng = random.Random(seed)
+        vocab = [f"w{i}" for i in range(n_vocab)]  # small → real repeats
+        return [
+            (d, " ".join(rng.choice(vocab) for _ in range(rng.randint(lo, hi))))
+            for d in range(n_docs)
+        ]
+
+    # the windows are keyed by a 128-bit double xxhash64 of their text;
+    # the brute force compares the text itself
+    for docs, windows in (
+        (corpus(11, 12, 3, 40, 30), (7, 4)),
+        (corpus(23, 10, 5, 35, 25), (5,)),
+    ):
+        df = spark.createDataFrame(docs, "doc_id long, text string")
+        pre = df.select("doc_id", tokenize(F.col("text")).alias("toks"))
+        for w in windows:
+            got = {
+                tuple(r)
+                for r in substring_spans(
+                    pre, "doc_id", "toks", window=w, min_docs=2
+                ).collect()
+            }
+            want = _spans_bruteforce(docs, window=w)
+            assert got == want, w
+        assert want, "each corpus shares spans at its last window"
 
 
 def test_dsir_lr_artifact_parquet_roundtrip_bit_identical(spark, tmp_path):
@@ -1447,35 +1455,6 @@ def test_km_assign_blas_matches_decimal_unrolled(spark):
     for k in a:
         assert a[k][0] == b[k][0], k
         assert abs(a[k][1] - b[k][1]) < 1e-6, k
-
-
-def test_substring_spans_hashed_fingerprints_match_string_keys(spark):
-    # the production shuffle key (128-bit double-xxhash64 of the
-    # window) must yield the exact span set the string key yields
-    import random
-
-    from mldag_spark.functions import tokenize
-    from mldag_spark.operators.dedup import substring_spans
-
-    rng = random.Random(23)
-    vocab = [f"w{i}" for i in range(10)]
-    corpus = [
-        (d, " ".join(rng.choice(vocab) for _ in range(rng.randint(5, 35))))
-        for d in range(25)
-    ]
-    df = spark.createDataFrame(corpus, "doc_id long, text string")
-    pre = df.select("doc_id", tokenize(F.col("text")).alias("toks"))
-    a = {
-        tuple(r)
-        for r in substring_spans(pre, "doc_id", "toks", window=5).collect()
-    }
-    b = {
-        tuple(r)
-        for r in substring_spans(
-            pre, "doc_id", "toks", window=5, hash_fingerprints=True
-        ).collect()
-    }
-    assert a == b and a
 
 
 def test_ngram_coverage_overlap_counted_once(spark, tmp_path):
@@ -1832,28 +1811,43 @@ def test_bpe_apply_checkpointing_matches_learn(spark, monkeypatch):
     )
 
 
-def test_bloom_tree_merge_bit_identical_and_auto_switch(spark):
+def _tree_merge_levels(monkeypatch) -> list:
+    """Record the tree-merge reduction levels ``bloom_build`` plans:
+    one grouped ``applyInPandas`` per level; the driver merge plans
+    none."""
+    from pyspark.sql.group import GroupedData
+
+    levels: list = []
+    real = GroupedData.applyInPandas
+
+    def spy(self, func, schema):
+        levels.append(schema)
+        return real(self, func, schema)
+
+    monkeypatch.setattr(GroupedData, "applyInPandas", spy)
+    return levels
+
+
+def test_bloom_tree_merge_bit_identical_and_auto_switch(spark, monkeypatch):
     """VERDICT r11 #7: a production-sized bitmap times |partitions|
     can't be collected to one heap — the tree merge ORs chunk-keyed
     partials executor-side and the driver receives exactly one
-    bitmap's worth. Both merges must be BIT-identical, and "auto"
-    must pick the tree path once |partitions|·m/8 crosses the
-    threshold."""
-    from mldag_spark.operators.bloom import bloom_build
+    bitmap's worth. Both merges must be BIT-identical, and the build
+    must pick the tree path once |partitions|·m/8 crosses
+    ``BLOOM_TREE_MERGE_THRESHOLD`` (read at call time)."""
+    import mldag_spark.operators.bloom as bl
 
     vals = spark.createDataFrame(
         [(f"tok{i}",) for i in range(500)], ["s"]
     ).repartition(8)
     m_bits = 1 << 16
-    via_driver = bloom_build(vals, "s", m_bits=m_bits, k=4, merge="driver")
-    via_tree = bloom_build(vals, "s", m_bits=m_bits, k=4, merge="tree")
+    levels = _tree_merge_levels(monkeypatch)
+    via_driver = bl.bloom_build(vals, "s", m_bits=m_bits, k=4)
+    assert levels == []  # 8 partitions x 8 KiB: the driver merge
+    monkeypatch.setattr(bl, "BLOOM_TREE_MERGE_THRESHOLD", 0)
+    via_tree = bl.bloom_build(vals, "s", m_bits=m_bits, k=4)
+    assert levels, "over the threshold the build takes the tree merge"
     assert via_driver == via_tree
-    # auto with a 1-byte threshold must route through the tree path
-    # and still produce the same filter
-    via_auto = bloom_build(
-        vals, "s", m_bits=m_bits, k=4, merge="auto", tree_merge_threshold=1
-    )
-    assert via_auto == via_driver
 
 
 def test_bloom_membership_matches_python_replay(spark):
@@ -2372,24 +2366,37 @@ def test_bpe_trainer_auto_routes_by_measured_size(spark, monkeypatch):
 
 
 def test_bpe_measures_and_collects_its_vocabulary_in_one_action(
-    spark, spark_jobs
+    spark, sf_dir, spark_jobs, monkeypatch, persistent_rdds
 ):
     """The route decision and the local trainer's input are one
-    bounded collect of the cached vocabulary: ``bpe_learn`` runs as
-    many jobs as that single action does on its own (a count to
-    measure, then a second collect, took two actions)."""
-    from mldag_spark.materialize import cache, collect_bounded, release
-    from mldag_spark.operators.tokenizer import bpe_learn, word_vocab
+    bounded collect of the uncached vocabulary: a gate-scale
+    ``bpe_learn`` runs the two jobs that single action runs on its
+    own, the aggregate's shuffle stage and the collect (a count to
+    measure, then a second collect, took more; so did a cache below
+    the collect, which AQE runs as a job of its own), and caches
+    nothing. The distributed route caches the vocabulary for its
+    merge loop, learns the same merges and the same encoded
+    vocabulary, and leaves no persistent RDD behind a ``scope()``."""
+    import mldag_spark.operators.tokenizer as tok
+    from mldag_spark.materialize import collect_bounded, scope
+    from mldag_spark.queries.tables import load
 
-    docs = _bpe_docs(spark, {"ab": 3, "cd": 2, "abcd": 1})
+    docs = load(spark, sf_dir, "documents")
+    before = persistent_rdds()
     with spark_jobs("bpe.one_collect.reference") as ref:
-        vocab = cache(word_vocab(docs))
-        assert collect_bounded(vocab, 10).num_rows == 3
-    release(vocab)
+        collect_bounded(tok.word_vocab(docs), tok._LOCAL_VOCAB_CAP)
     with spark_jobs("bpe.one_collect.learn") as ids:
-        merges, _ = bpe_learn(docs, n_merges=2)
-    assert len(merges) == 2
-    assert len(ids) == len(ref), (ids, ref)
+        merges, enc = tok.bpe_learn(docs, n_merges=3)
+    assert len(merges) == 3
+    assert len(ids) == len(ref) == 2, (ids, ref)
+    assert persistent_rdds() <= before
+    monkeypatch.setattr(tok, "_LOCAL_VOCAB_CAP", 0)
+    with scope():
+        dist, enc_dist = tok.bpe_learn(docs, n_merges=3)
+        rows_dist = sorted((r["s"], r["cnt"]) for r in enc_dist.collect())
+    assert dist == merges
+    assert rows_dist == sorted((r["s"], r["cnt"]) for r in enc.collect())
+    assert persistent_rdds() <= before
 
 
 def test_bpe_local_trainer_bounded_collect(spark, monkeypatch):
@@ -2501,7 +2508,7 @@ def test_opq_train_rejects_nonpositive_iters(spark, sf_dir):
         opq_train(emb, m=8, ksub=4, iters=0)
 
 
-def test_bloom_tree_merge_multi_level_bit_identical(spark):
+def test_bloom_tree_merge_multi_level_bit_identical(spark, monkeypatch):
     """ADVICE r12 #1: the tree merge must never materialize all
     ~|partitions| copies of a chunk in one task. With fanout forced to
     2 and 8 source partitions the reduction runs ceil(log2(8)) = 3
@@ -2513,13 +2520,12 @@ def test_bloom_tree_merge_multi_level_bit_identical(spark):
         [(f"tok{i}",) for i in range(300)], ["s"]
     ).repartition(8)
     m_bits = 1 << 15
-    via_driver = bl.bloom_build(vals, "s", m_bits=m_bits, k=4, merge="driver")
-    old = bl._BLOOM_TREE_FANOUT
-    try:
-        bl._BLOOM_TREE_FANOUT = 2
-        via_tree = bl.bloom_build(vals, "s", m_bits=m_bits, k=4, merge="tree")
-    finally:
-        bl._BLOOM_TREE_FANOUT = old
+    via_driver = bl.bloom_build(vals, "s", m_bits=m_bits, k=4)
+    levels = _tree_merge_levels(monkeypatch)
+    monkeypatch.setattr(bl, "BLOOM_TREE_MERGE_THRESHOLD", 0)
+    monkeypatch.setattr(bl, "_BLOOM_TREE_FANOUT", 2)
+    via_tree = bl.bloom_build(vals, "s", m_bits=m_bits, k=4)
+    assert len(levels) == 3, levels
     assert via_tree == via_driver
 
 
@@ -3109,19 +3115,19 @@ def test_bloom_build_sized_autoroutes_and_matches_single(spark, sf_dir):
         "bucket", _split_bucket()
     )
     train = docs.filter(F.col("bucket") < 80)
-    # (a) auto route == the pinned gate arithmetic at gate scale
+    sh = shingle_rows(
+        docs.filter(F.col("bucket") >= 90), "doc_id", "text", 5,
+        complete_only=True,
+    ).select(F.col("shingle").alias("s"))
+    # (a) the measured route == the pinned gate arithmetic at gate scale
     auto = decontamination_bloom(docs)
-    pinned = decontamination_bloom(docs, m_bits=_BLOOM_M)
-    assert len(auto) == 1 and auto[0] == pinned[0]
+    pinned = bl.bloom_build(sh, "s", m_bits=_BLOOM_M)
+    assert len(auto) == 1 and auto[0] == pinned
     base = sorted(
         r["doc_id"] for r in bloom_survivors(train, auto).collect()
     )
     # (b) force the sharded route: same shingle frame, a claimed
     # production element count over a lowered cap
-    sh = shingle_rows(
-        docs.filter(F.col("bucket") >= 90), "doc_id", "text", 5,
-        complete_only=True,
-    ).select(F.col("shingle").alias("s"))
     old = bl._BLOOM_MAX_M_BITS
     try:
         bl._BLOOM_MAX_M_BITS = 1 << 20

@@ -10,6 +10,7 @@ edit, which this test turns into a reviewable diff.
 
 from __future__ import annotations
 
+import ast
 import glob
 import json
 import re
@@ -64,33 +65,61 @@ def test_never_gated_ledger_is_current_and_shrinking():
     )
 
 
+def _defined_names(rel: str) -> set[str]:
+    """Dotted names of the definitions in ``mldag_spark/<rel>``:
+    module- and class-level functions, classes and assigned names
+    (``MLDag.fit``, ``_KIND_ORDER``)."""
+    names: set[str] = set()
+
+    def walk(body, prefix):
+        for node in body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                names.add(prefix + node.name)
+            elif isinstance(node, ast.ClassDef):
+                names.add(prefix + node.name)
+                walk(node.body, f"{prefix}{node.name}.")
+            elif isinstance(node, ast.Assign):
+                names.update(
+                    prefix + t.id for t in node.targets
+                    if isinstance(t, ast.Name)
+                )
+            elif isinstance(node, ast.AnnAssign) and isinstance(
+                node.target, ast.Name
+            ):
+                names.add(prefix + node.target.id)
+
+    walk(ast.parse((REPO / "mldag_spark" / rel).read_text()).body, "")
+    return names
+
+
 def test_parity_cites_resolve_to_definitions():
-    """Every `core/*.py:N` / `persistence.py:N` cite in PARITY.md must
-    point at a line that STARTS a definition (def/class/decorator/
-    module constant) in the current source (VERDICT r7 #6 — §2.1 cites
-    drifted in r6, §2.2 cites drifted in r7; this turns any future
-    drift into a test failure instead of a judge finding).
+    """Every `core/*.py::Symbol` / `persistence.py::Symbol` cite in
+    PARITY.md (comma-separated symbols share one file) must name a
+    definition in the current source, resolved with ``ast``: a
+    renamed or deleted function, method, class or module constant
+    fails here instead of leaving a stale map (VERDICT r7 #6). Cites
+    by symbol do not drift when code moves, so line-number cites of
+    these files are refused.
 
     Reference-side cites (``mldagbase.py:…``, bare ``graph.py:…``,
     ``display.py:…``) are out of scope — they cite the read-only
     reference checkout, not this repo.
     """
     text = _parity_text()
-    cite = re.compile(r"`((?:core/\w+|persistence)\.py):([\d,-]+)`")
-    deflike = re.compile(r"^\s*(def |class |async def |@|_?[A-Za-z_]\w* = )")
+    line_cite = re.compile(r"`(?:core/\w+|persistence)\.py:\d")
+    assert not line_cite.findall(text), "cite by symbol, not by line"
+    cite = re.compile(r"`((?:core/\w+|persistence)\.py)::([\w.,]+)`")
     checked = 0
     bad = []
     for m in cite.finditer(text):
-        rel, nums = m.groups()
-        src = (REPO / "mldag_spark" / rel).read_text().splitlines()
-        for part in nums.split(","):
-            lineno = int(part.split("-")[0])
+        rel, syms = m.groups()
+        defined = _defined_names(rel)
+        for sym in syms.split(","):
             checked += 1
-            if lineno > len(src) or not deflike.match(src[lineno - 1]):
-                got = src[lineno - 1][:60] if lineno <= len(src) else "<past EOF>"
-                bad.append(f"{rel}:{lineno} -> {got!r}")
+            if sym not in defined:
+                bad.append(f"{rel}::{sym}")
     assert checked >= 40, f"cite regex matched too little ({checked})"
-    assert not bad, f"PARITY cites drifted: {bad}"
+    assert not bad, f"PARITY cites name no definition: {bad}"
 
 
 # Core-scaled probe gates per SCALING column: sf0.1/sf1.0 rows ran in

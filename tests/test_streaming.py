@@ -290,39 +290,54 @@ def test_incremental_dedup_stream_matches_batch(spark, tmp_path):
 
 
 def test_pipeline_clean_stream_sized_bitmap_matches_gate_at_floor(spark, sf_dir):
-    """The m_bits parameter's contract: bloom_sized_m_bits floors at
-    the gate default, so at gate scale the production-sized pipeline
-    is BIT-IDENTICAL to the registered (oracle-pinned) query — sizing
-    only diverges when the test split actually outgrows 2^20 bits
-    (the measured sf3/sf10 saturation regime)."""
-    from mldag_spark.operators.bloom import bloom_sized_m_bits
-    from mldag_spark.queries.streaming import (
-        pipeline_clean_stream_frame,
-        stream_pipeline_clean,
+    """The registered query sizes its bloom from the test split's
+    measured shingle count, and the sizing floors at the gate default:
+    at gate scale the bitmap is BIT-IDENTICAL to the fixed 2^20-bit
+    build the oracle replays, and the streamed survivors are the
+    oracle's. Sizing only diverges when the test split outgrows 2^20
+    bits (the measured sf3/sf10 saturation regime)."""
+    import duckdb
+
+    from mldag_spark.functions import shingle_rows
+    from mldag_spark.operators.bloom import bloom_build, bloom_sized_m_bits
+    from mldag_spark.queries import ORACLES
+    from mldag_spark.queries.streaming import stream_pipeline_clean
+    from mldag_spark.queries.text import (
+        _split_bucket,
+        decontamination_bloom,
+        pipeline_clean_stage,
+        pipeline_dedup_stage,
+        pipeline_gate_exprs,
     )
 
     m = bloom_sized_m_bits(1000)  # gate-scale shingle counts << floor
     assert m == 1 << 20
-    fixed = sorted(
+    _n, _dr, keep = pipeline_gate_exprs()
+    scored = (
+        pipeline_dedup_stage(pipeline_clean_stage(load(spark, sf_dir, "documents")))
+        .filter(keep)
+        .withColumn("bucket", _split_bucket())
+    )
+    test_sh = shingle_rows(
+        scored.filter(F.col("bucket") >= 90), "doc_id", "clean", 5,
+        complete_only=True,
+    ).select(F.col("shingle").alias("s"))
+    assert decontamination_bloom(scored, text_col="clean") == [
+        bloom_build(test_sh, "s", m_bits=m)
+    ]
+    got = sorted(
         (r["doc_id"], r["n_tokens"])
         for r in stream_pipeline_clean(spark, sf_dir).collect()
     )
-    sized = sorted(
-        (r["doc_id"], r["n_tokens"])
-        for r in pipeline_clean_stream_frame(spark, sf_dir, m_bits=m).collect()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
     )
-    assert fixed == sized and len(fixed) > 0
-    # r15: m_bits="auto" (measure -> size -> shard if over-cap) must
-    # also equal the pinned arithmetic at gate scale — the measured
-    # count sits far under the floor, so the route returns ONE
-    # floor-sized filter and the pipeline is bit-identical
-    auto = sorted(
-        (r["doc_id"], r["n_tokens"])
-        for r in pipeline_clean_stream_frame(
-            spark, sf_dir, m_bits="auto"
-        ).collect()
+    want = sorted(
+        tuple(r) for r in con.execute(ORACLES["stream_pipeline_clean"]).fetchall()
     )
-    assert fixed == auto
+    con.close()
+    assert got == want and len(got) > 0
 
 
 def test_pack_stream_matches_batch_and_replays_idempotently(
