@@ -7,13 +7,18 @@ or measures plans no caller gets; one that runs queries outside a
 ``materialize.scope()`` carries their blocks into the next query; a
 cited ``scripts/<name>.py`` that was deleted sends the reader nowhere;
 a size probe written outside ``materialize.collect_bounded`` costs the
-extra Spark action that function exists to save.
+extra Spark action that function exists to save; prose copied from
+SCALING.json into its harness drifts from the file that owns it.
 """
 
 from __future__ import annotations
 
 import ast
+import importlib.util
+import json
 import re
+import subprocess
+import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -43,7 +48,8 @@ def test_every_query_running_script_opens_a_scope():
 
 def test_cited_script_paths_exist():
     sources = [*(REPO / "mldag_spark").rglob("*.py"),
-               *(REPO / "tests").rglob("*.py"), REPO / "README.md"]
+               *(REPO / "tests").rglob("*.py"), *(REPO / "scripts").glob("*.py"),
+               REPO / "README.md", REPO / ".claude" / "skills" / "verify" / "SKILL.md"]
     cited = {(name, str(p.relative_to(REPO))) for p in sources
              for name in re.findall(r"scripts/(\w+\.py)", p.read_text())}
     assert ("check_oracle.py", "README.md") in cited
@@ -130,3 +136,74 @@ def test_dump_plans_runs_udf_queries_from_another_directory(tmp_path, sf_dir):
     plan = (tmp_path / "out" / "multimodal_fitted_audit.txt").read_text()
     assert not plan.startswith("ERROR"), plan[:300]
     assert "== Physical Plan ==" in plan
+
+
+def _bench_scaling():
+    spec = importlib.util.spec_from_file_location(
+        "bench_scaling", REPO / "scripts" / "bench_scaling.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _scaling() -> dict:
+    return json.loads((REPO / "SCALING.json").read_text())
+
+
+def test_scaling_merge_without_rows_is_byte_identical():
+    # SCALING.json owns the harness's prose, so merging nothing into it
+    # gives it back unchanged; and loading the harness starts no Spark
+    text = (REPO / "SCALING.json").read_text()
+    assert json.dumps(_bench_scaling().merge(json.loads(text), {}), indent=1) == text
+    loaded = subprocess.run(
+        [sys.executable, "-c", "import sys; sys.path.insert(0, 'scripts'); "
+         "import bench_scaling; print(sorted(m for m in sys.modules "
+         "if m.split('.')[0] in ('pyspark', 'py4j')))"],
+        cwd=REPO, capture_output=True, text=True, timeout=120, check=True)
+    assert loaded.stdout.strip() == "[]"
+
+
+def test_scaling_merge_restamps_the_ratio_prefix():
+    prior = _scaling()
+    old_row = prior["queries"]["q6_revenue_forecast"]
+    old_text = prior["sf3.0_diagnoses"]["q6_revenue_forecast"]
+    out = _bench_scaling().merge(prior, {
+        "q6_revenue_forecast": {"sf3.0_sec": 9.9, "ratio_30x": 48.06}})
+    assert out["sf3.0_diagnoses"]["q6_revenue_forecast"] == (
+        "48.06x at 30x data: " + old_text.split(": ", 1)[1])
+    row = out["queries"]["q6_revenue_forecast"]
+    assert row["sf1.0_sec"] == old_row["sf1.0_sec"]  # not re-measured: kept
+    assert prior["sf3.0_diagnoses"]["q6_revenue_forecast"] == old_text
+
+
+def test_scaling_merge_reports_a_core_count_change():
+    # a 4-vCPU host cannot reproduce the 32-core rows, so replacing one
+    # is reported; columns measured before the stamp count as local[32]
+    # (sf0.1, sf1.0) and local[16] (sf3.0, sf10)
+    mod = _bench_scaling()
+    prior = _scaling()
+    row = {"sf0.1_sec": 0.3, "cores_sf0.1": 4,
+           "sf3.0_sec": 0.9, "cores_sf3.0": 16}
+    assert mod.core_changes(prior, {"q6_revenue_forecast": row}) == [
+        "q6_revenue_forecast sf0.1: 4 cores replace 32"]
+    restamped = mod.merge(prior, {"q6_revenue_forecast": row})
+    assert mod.core_changes(restamped, {"q6_revenue_forecast": row}) == []
+
+
+def test_bench_scaling_holds_no_prose():
+    # diagnoses, notes and session text live in SCALING.json only
+    tree = ast.parse((REPO / "scripts" / "bench_scaling.py").read_text())
+
+    def is_str(node):
+        return isinstance(node, ast.JoinedStr) or (
+            isinstance(node, ast.Constant) and isinstance(node.value, str))
+
+    prose = []
+    for stmt in tree.body:
+        if not isinstance(stmt, (ast.Assign, ast.AnnAssign)) or stmt.value is None:
+            continue
+        for node in ast.walk(stmt.value):
+            if ((is_str(node) and node.end_lineno > node.lineno)
+                    or (isinstance(node, ast.Dict) and any(map(is_str, node.values)))):
+                prose.append(stmt.lineno)
+    assert not prose, prose
